@@ -135,19 +135,12 @@ def udf_vectorized_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         return len(gaps)
 
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    # r21 (guide §2.5): the events table is one small parquet file and
-    # its window exchange AQE-coalesces to ONE partition, so the lag
-    # window + BOTH pandas aggregates + the Arrow boundary ran as a
-    # single 2.2 s task (stage attribution). An explicit CPU-budget
-    # repartition on the window/group key satisfies the window's AND
-    # the grouped-agg's clustering requirement (no further exchange,
-    # plan diff plans/r21/udf_vectorized_agg_*), spreads the Python
-    # work across workers, and AQE never re-coalesces an explicit
-    # repartition. Per-group results are partitioning-independent.
-    # r22: width-preserving (max(cores, shuffle.partitions)) — the lag
-    # window needs a user_id exchange at ANY scale (windows have no
-    # partial aggregation), so this exchange REPLACES the window's own;
-    # it must never narrow below the configured shuffle width.
+    # The window exchange over the one small events file AQE-coalesces
+    # to ONE partition. A repartition on the window/group key
+    # (io.width_preserving_spread) satisfies the window's AND the grouped
+    # aggregate's clustering, so it replaces the window's own exchange
+    # and spreads the Python work. Per-group results are
+    # partitioning-independent.
     ev = (
         width_preserving_spread(load(spark, sf_dir, "events"), "user_id")
         .select(

@@ -72,37 +72,37 @@ def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 def cpu_spread(
     df: DataFrame, *keys: str, keep_exchange: bool = False
 ) -> DataFrame:
-    """CPU-budget repartition of a scan-rooted frame, GATED on the
-    observed input layout (r22; guide §2.5 input parallelism + §5).
+    """Spread a scan-rooted, CPU-bound relation over the core budget,
+    but only when its scan layout cannot already do so.
 
-    The r21 spreads fixed a real local pathology — these corpora are
-    bytes-tiny single-row-group files, so byte-based splits hand the
-    whole table to 1-2 tasks while the consumers are CPU-bound (HOF
-    cosines, shingling, gram explosion) — but they were UNCONDITIONAL:
-    at 100 TB the same `repartition(defaultParallelism, key)` would
-    COALESCE a many-thousand-partition scan down to the core count
-    (giant partitions, spill risk) and pay a full shuffle of the corpus
-    that byte splitting already made unnecessary. Gate: spread only
-    when the scan layout cannot already produce >= cores real splits —
-    i.e. the source has fewer files than cores AND its estimated bytes
-    are under cores x maxPartitionBytes. Both probes are metadata-only
-    (the cached file index / the optimizer's size estimate); no job
-    runs. When the gate says the input is already wide, pass through
-    unchanged — never scale parallelism down.
+    This module owns the spread policy: call sites pick `cpu_spread`
+    (scan-rooted input) or `width_preserving_spread` (mid-plan input)
+    and never size a spread themselves. Why spread at all: the lake's
+    inputs are byte-small files of one or a few row groups, so parquet's
+    byte-based splits hand a whole table to 1-2 tasks, while the
+    consumers (shingling, gram explosion, cosines over higher-order
+    functions, profile stacks) are CPU-bound. Why gate it: the same
+    `repartition(cores, key)` on a wide production scan would coalesce
+    thousands of splits down to the core count and shuffle a corpus that
+    byte splitting already parallelized. So the spread runs only when
+    the scan has fewer files than cores AND fewer estimated bytes than
+    cores x maxPartitionBytes. Both probes are metadata-only (the cached
+    file index, the optimizer's size estimate); no job runs. Otherwise
+    the input passes through unchanged: a spread never narrows.
 
-    `keep_exchange=True` is for callers whose repartition ALSO replaces
-    heavier downstream shuffles (gopher's gram-count exchanges carry
-    exploded 3-grams — more bytes than the raw docs): on the wide path
-    the exchange is kept but width comes from shuffle.partitions + AQE
-    coalescing (`repartition(*keys)` with no count), which scales with
-    the data instead of clamping to the core count.
+    A probe that raises (a non-file source, drift in Spark internals)
+    leaves the layout unknown, and an unknown layout counts as wide:
+    passing through can cost local parallelism, narrowing can cost a
+    production scan its width.
 
-    The spread itself hash-partitions on the given id — deterministic
-    under task retry (guide §2.5) — and every caller's downstream float
-    use is per-row or integer-exact before any cross-row reduce, so
-    partitioning cannot move a result. If the layout probe fails (non-
-    file source, internals drift), fall back to spreading: that is the
-    r21 behavior, correct for every local path."""
+    `keep_exchange=True` is for callers whose repartition also replaces
+    a heavier downstream shuffle (e.g. one carrying exploded grams): on
+    the wide path the exchange stays, with its width left to
+    shuffle.partitions and AQE coalescing (`repartition(*keys)`).
+
+    The spread hash-partitions on the given keys, which is deterministic
+    under task retry, and callers use floats per row or integer-exactly
+    before any cross-row reduce, so partitioning cannot move a result."""
     spark = df.sparkSession
     cores = spark.sparkContext.defaultParallelism
     try:
@@ -116,8 +116,8 @@ def cpu_spread(
             spark.conf.get("spark.sql.files.maxPartitionBytes", "128MB")
         )
         already_wide = n_files >= cores or est_bytes >= cores * max_split
-    except Exception:  # pragma: no cover — non-file plans, internals drift
-        already_wide = False
+    except Exception:  # non-file plan, internals drift: layout unknown
+        already_wide = True
     if not already_wide:
         return df.repartition(cores, *keys)
     if keep_exchange:
@@ -126,17 +126,17 @@ def cpu_spread(
 
 
 def width_preserving_spread(df: DataFrame, *keys: str) -> DataFrame:
-    """CPU-budget repartition of a MID-PLAN relation (r22 gating of the
-    r21 PPJoin candidate spread): the input sits above an AQE-coalesced
-    exchange, so a layout probe would have to execute the plan — gate on
-    configuration instead. Locally shuffle.partitions == the core
-    budget, so this is exactly the r21 `repartition(cores, keys)` (AQE
-    never re-coalesces an explicit numPartitions repartition — that is
-    the point: AQE optimizes for shuffle BYTES and under-parallelizes
-    CPU-bound verify work on a ~1 MB pair relation). On a cluster where
-    shuffle.partitions is configured above the core count, use THAT
-    width: never repartition a big relation DOWN below the width its
-    producing shuffle was configured for."""
+    """Spread a mid-plan relation to max(cores, shuffle.partitions).
+
+    The input sits above an exchange, so a layout probe would have to
+    run the plan; the width comes from configuration instead. An
+    explicit partition count is the point: AQE sizes partitions by
+    shuffle bytes and would coalesce a small but CPU-bound relation
+    (verify pairs, a micro-batch, a window's input) to one task, and it
+    never re-coalesces an explicit count. Taking the max with
+    shuffle.partitions keeps the spread from narrowing a relation below
+    the width its producing shuffle was configured for. Locally the two
+    are equal, so this is `repartition(cores, *keys)`."""
     spark = df.sparkSession
     cores = spark.sparkContext.defaultParallelism
     try:

@@ -799,15 +799,9 @@ def profile_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum = sum(value * count). Two cascaded aggregations, both partial
     map-side, shuffling only histogram entries — the same cascade shape
     as agg_time_rollup."""
-    # r22 (guide §2.5): lineitem.parquet has 3 row groups, so the scan
-    # caps at 3 tasks (minPartitionNum cannot split a row group) and the
-    # stack+partial-histogram — the query's CPU-bound cost, 4x rows
-    # after stack — ran as 3 tasks of ~0.4 s each (stage attribution).
-    # One gated CPU-budget repartition (hash on l_orderkey, no sort)
-    # spreads the profiling across the core budget; interleaved A/B
-    # 0.65-0.72x. Column pruning pushes below the repartition, so the
-    # exchange carries only the profiled columns; at scale the gate
-    # passes a wide scan through untouched (io.cpu_spread).
+    # the stack + partial histogram is CPU-bound (4x rows after stack;
+    # io.cpu_spread); column pruning pushes below the repartition, so the
+    # exchange carries only the profiled columns
     li = cpu_spread(load(spark, sf_dir, "lineitem"), "l_orderkey")
     # SQL-text twin of functions.exact.cents() — embedded in the stack
     stack_args = ", ".join(

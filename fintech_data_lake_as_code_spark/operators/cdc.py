@@ -403,12 +403,12 @@ def cdc_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     # CPU-budget repartition of events on user_id (to satisfy both
     # _latest_state groupBys and the snapshot⋈batch join) was a
     # consistent 1.25–3.0x interleaved-A/B REGRESSION (6/6 pairs slower,
-    # median ratio 1.87; scripts/ab_cdc_spread.py) and read 1.1–1.4 s vs
-    # the 0.74 s baseline in the full bench. The spread shuffles RAW
-    # events — including the JSON props column — to replace what are
-    # tiny partial-aggregated exchanges; the map side already reduces
-    # per-user before any exchange, so the extra full-width exchange of
-    # raw rows costs more than the single-task reduce it parallelizes.
+    # median ratio 1.87) and read 1.1–1.4 s vs the 0.74 s baseline in
+    # the full bench. The spread shuffles RAW events — including the
+    # JSON props column — to replace what are tiny partial-aggregated
+    # exchanges; the map side already reduces per-user before any
+    # exchange, so the extra full-width exchange of raw rows costs more
+    # than the single-task reduce it parallelizes.
     return incremental_agg(load(spark, sf_dir, "events"))
 
 

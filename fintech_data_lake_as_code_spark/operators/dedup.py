@@ -53,14 +53,9 @@ def _corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.concat("text", F.lit(" zqx")).alias("text"),
         )
     )
-    # Shingling/hashing downstream is CPU-bound (~MB/s per core), so split
-    # the corpus by CPU budget, not input bytes — parquet row-group splits
-    # underestimate parallelism for compute-heavy text work. Partitioning
-    # BY doc_id also pre-locates the per-doc signature/fingerprint groupBys
-    # (explode is narrow, so hashpartitioning(doc_id) survives to the agg).
-    # r22: gated on the scan layout (io.cpu_spread) — a 100 TB docs scan
-    # is already wide, and the per-doc signature aggregations partial-
-    # aggregate map-side, so the wide path passes through unchanged.
+    # Shingling/hashing downstream is CPU-bound (io.cpu_spread). Hashing
+    # BY doc_id also pre-locates the per-doc signature/fingerprint
+    # groupBys (explode is narrow, so the partitioning reaches the agg).
     return cpu_spread(d.unionByName(twins), "doc_id")
 
 
@@ -571,13 +566,6 @@ def _dvec(col: str) -> Column:
     return F.transform(col, lambda x: x.cast("double"))
 
 
-def _spread_vecs(df: DataFrame) -> DataFrame:
-    """CPU-budget repartition for vector corpora (see _emb_corpus note;
-    shared shape with similarity._spread). r22: gated on the observed
-    scan layout (io.cpu_spread) — pass through when already wide."""
-    return cpu_spread(df, "vec_id")
-
-
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
@@ -605,17 +593,10 @@ def _emb_corpus(
             F.expr("transform(slice(embedding, 2, size(embedding) - 1), x -> cast(x as double))"),
         ).alias("v"),
     )
-    # Repartition by CPU budget (r21, the _corpus rationale applied to
-    # vectors): the pairwise cosine verifies downstream are CPU-bound
-    # interpreted HOF work, and embeddings.parquet's byte-based splits
-    # give the whole corpus 1-2 scan tasks — stage attribution measured
-    # the SemDeDup verify stages as three ~4.5 core-second 2-task
-    # stages. Hash on vec_id is deterministic under retry; all
-    # downstream float use is per-row or integer-exact before any
-    # cross-row reduce, so partitioning cannot move a result.
+    # the pairwise cosine verifies downstream are CPU-bound (io.cpu_spread)
     both = base.unionByName(twins)
     if spread:
-        both = _spread_vecs(both)
+        both = cpu_spread(both, "vec_id")
     return both.withColumn("nv", F.sqrt(_dot(F.col("v"), F.col("v"))))
 
 
@@ -853,11 +834,18 @@ def dedup_cluster_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     `connected_components` for the algorithm and its convergence bound).
     Oracle: DuckDB recursive-CTE transitive closure."""
     pairs = dedup_ngram_jaccard(spark, sf_dir).select("id_a", "id_b")
+    # both directions from ONE pass over the pairs: a union of two
+    # projections would plan the pair generation twice
     edges = (
-        pairs.select(F.col("id_a").alias("node"), F.col("id_b").alias("other"))
-        .unionByName(
-            pairs.select(F.col("id_b").alias("node"), F.col("id_a").alias("other"))
+        pairs.select(
+            F.explode(
+                F.array(
+                    F.struct(F.col("id_a").alias("node"), F.col("id_b").alias("other")),
+                    F.struct(F.col("id_b").alias("node"), F.col("id_a").alias("other")),
+                )
+            ).alias("e")
         )
+        .select("e.node", "e.other")
         .cache()
     )
     labels, _ = connected_components(edges)
@@ -1027,29 +1015,12 @@ def incremental_pairs(
     if cand is None:
         pref = _prefix_postings(shingled)
         cand = _candidate_ids(pref, pref).distinct()
-    # r21 (guide §2.5 — AQE coalescing optimizes for shuffle BYTES and
-    # under-parallelizes CPU-bound work): the candidate pair relation is
-    # ~1 MB at sf0.1, so AQE coalesces the post-distinct exchange to ONE
-    # partition — and the verification below (sorted-hash-array
-    # intersections, the query's dominant per-row cost) then runs as a
-    # single 1.3 s task. r22 stage attribution found the r21 spread
-    # NEVER TOOK EFFECT: repartition(N, id_a, id_b) directly above the
-    # distinct's identically-keyed exchange is elided by
-    # EnsureRequirements (the child already provides that exact
-    # partitioning), leaving only the AQE-coalescible
-    # ENSURE_REQUIREMENTS exchange — the verify was still one task
-    # (plans/r22/dedup_incremental_before.txt node (26); the r21 A/B's
-    # 0.93-1.08x noise reading is explained). Partition on id_a ALONE
-    # instead: a different partitioning survives EnsureRequirements,
-    # REPARTITION_BY_NUM is never AQE-coalesced, and it satisfies the
-    # first verify join's clustering requirement — locally the verify
-    # spreads to the core budget under the broadcast joins; at scale,
-    # where the corpus sides are too big to broadcast, the sort-merge
-    # join would demand an id_a exchange anyway, so this REPLACES that
-    # exchange instead of adding one. Width = max(cores,
-    # shuffle.partitions) (width_preserving_spread): never below the
-    # width the producing shuffle was configured for. Pair rows are
-    # key-complete, so partitioning cannot move a result.
+    # The verify (sorted-hash-array intersections) is CPU-bound
+    # (io.width_preserving_spread). Key on id_a ALONE: a repartition on
+    # (id_a, id_b) right above the distinct's identically keyed exchange
+    # is elided by EnsureRequirements, leaving one AQE-coalesced verify
+    # task; id_a also satisfies the first verify join's clustering, so
+    # at scale this replaces that join's exchange instead of adding one.
     cand = width_preserving_spread(cand, "id_a")
     sa = shingled.select(
         F.col("doc_id").alias("id_a"),
@@ -1266,7 +1237,7 @@ def _containment_shingled(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("doc_id") + 200000).alias("doc_id"),
             F.array_join(F.slice(words, F.lit(1), k), " ").alias("text"),
         )
-        # r22: gated like _corpus — see the spread note there
+        # shingling is CPU-bound, as in _corpus (io.cpu_spread)
         corpus = cpu_spread(d.unionByName(excerpts), "doc_id")
         df = _shingle_artifact(corpus, keep_shingles=False).cache()
         _CONTAIN_CACHE[key] = df

@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..io import load, release_local_checkpoint
+from ..io import load, release_local_checkpoint, width_preserving_spread
 from ..registry import query
 
 PR_ITERS = 10
@@ -76,20 +76,6 @@ def _pr_oracle() -> str:
     LIMIT {PR_TOP}
     """
     )
-
-
-def _wedge_width(spark: SparkSession) -> int:
-    """Width of the cached oriented-edge layout (r22): the wedge
-    self-join requires clustering on `s` at ANY scale, so the exchange
-    stays — but pinning it to the core count would NARROW the cached
-    relation below the configured shuffle width on a real cluster.
-    max(cores, shuffle.partitions) is the io.width_preserving_spread
-    rule; locally the two are equal (plan unchanged)."""
-    cores = spark.sparkContext.defaultParallelism
-    try:
-        return max(cores, int(spark.conf.get("spark.sql.shuffle.partitions")))
-    except (TypeError, ValueError):  # pragma: no cover
-        return cores
 
 
 @query("graph_pagerank", oracle=_pr_oracle())
@@ -301,21 +287,18 @@ def _triangle_plan(spark: SparkSession, sf_dir: str):
     lower_first = (F.col("du") < F.col("dv")) | (
         (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
     )
-    # r21: cache the oriented edges PRE-PARTITIONED on the wedge key —
-    # the wedge self-join below joins this relation to itself on `s`,
-    # and a cache partitioned on s lets both join legs reuse the cached
-    # partitioning instead of each paying its own exchange (guide §2.4:
-    # two operations keyed the same way share one exchange; the extra
-    # exchange here runs once, at cache build). Deterministic hash key,
-    # and triangle counts are partitioning-independent.
-    oriented = (
+    # Cache the oriented edges pre-partitioned on the wedge key `s`: the
+    # wedge self-join below joins this relation to itself on `s`, so both
+    # join legs reuse the cached partitioning instead of each paying its
+    # own exchange (io.width_preserving_spread).
+    oriented = width_preserving_spread(
         und.join(F.broadcast(du), "u")
         .join(F.broadcast(dv), "v")
         .select(
             F.when(lower_first, F.col("u")).otherwise(F.col("v")).alias("s"),
             F.when(lower_first, F.col("v")).otherwise(F.col("u")).alias("d"),
-        )
-        .repartition(_wedge_width(spark), "s")
+        ),
+        "s",
     ).cache()
     # Wedges from a shared oriented source; (d1, d2) kept in one canonical
     # order per wedge via the same (deg, id) rank the orientation used —

@@ -97,21 +97,6 @@ _RANK_SQL = f"""
 """
 
 
-def _spread(df: DataFrame, key: str = "vec_id") -> DataFrame:
-    """Repartition a vector corpus by CPU budget (r21, guide §2.5 input
-    parallelism): embedding relations are bytes-tiny but their consumers
-    are CPU-bound (interpreted higher-order-function cosines over every
-    candidate pair), so parquet's byte-based splits catastrophically
-    underestimate parallelism — stage attribution measured the MaxSim
-    exact-scoring stage as ONE 9-second task because embeddings.parquet
-    is a single small file (the `_corpus` rationale in dedup.py, applied
-    to vectors). r22: gated on the observed scan layout (io.cpu_spread)
-    so a corpus already wide enough passes through unchanged — the
-    unconditional form would coalesce a 100 TB scan DOWN to the core
-    count."""
-    return cpu_spread(df, key)
-
-
 def _fresh_vecs(
     spark: SparkSession, sf_dir: str, spread: bool = True
 ) -> DataFrame:
@@ -123,7 +108,7 @@ def _fresh_vecs(
     vecs = load(spark, sf_dir, "embeddings").select(
         "vec_id", _dvec("embedding").alias("v")
     )
-    return _spread(vecs) if spread else vecs
+    return cpu_spread(vecs, "vec_id") if spread else vecs
 
 
 @query(
@@ -722,10 +707,12 @@ def sim_maxsim_multivector(spark: SparkSession, sf_dir: str) -> DataFrame:
     the pair relation comes from a candidate generator (the ANN paths
     here) instead of all label pairs; the MaxSim verify stage is
     unchanged."""
-    vecs = _spread(
+    # the MaxSim scoring is CPU-bound per vector pair (io.cpu_spread)
+    vecs = cpu_spread(
         load(spark, sf_dir, "embeddings").select(
             "vec_id", "label", _dvec("embedding").alias("x")
-        )
+        ),
+        "vec_id",
     )
     norms = _with_norm(vecs)
     labels = sorted(
@@ -907,10 +894,11 @@ def sim_maxsim_ann_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass exists only to make the claim verifiable — at 100 TB you'd
     grade recall on a sampled query workload exactly this way while
     production queries run the ANN path alone."""
-    vecs = _spread(
+    vecs = cpu_spread(
         load(spark, sf_dir, "embeddings").select(
             "vec_id", "label", _dvec("embedding").alias("x")
-        )
+        ),
+        "vec_id",
     )
     ann = maxsim_ann_scores(vecs, F.col("label") % 2 == 0)
     exact = sim_maxsim_multivector(spark, sf_dir)

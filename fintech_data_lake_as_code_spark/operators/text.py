@@ -859,16 +859,8 @@ def text_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     set is a few MB against TBs of probes."""
     from .dedup import _shingles
 
-    # r21 (guide §2.5): shingling is the CPU-bound cost and
-    # documents.parquet is one unsplittable row group — the whole
-    # shingle+probe stage ran as a single 1.6 s task (stage
-    # attribution; files.minPartitionNum can't split one row group).
-    # CPU-budget repartition on doc_id is the _corpus rationale; the
-    # output is per-doc aggregates, partitioning-independent. r22:
-    # gated on the scan layout (io.cpu_spread) — at 100 TB the docs
-    # scan is already wide and the downstream groupBy(doc_id) exchange
-    # carries only partial aggregates (far fewer bytes than the raw
-    # docs), so the wide path passes through with NO exchange here.
+    # shingling is the CPU-bound cost (io.cpu_spread); the output is
+    # per-doc aggregates, so partitioning cannot move it
     d = cpu_spread(load(spark, sf_dir, "documents"), "doc_id")
     is_bench = F.col("doc_id") % DECONTAM_BENCH_MOD == 0
     shingle_rows = d.select(
@@ -1320,19 +1312,12 @@ def repetition_stats(d: DataFrame) -> DataFrame:
     """Core of `text_repetition_gopher` over any (doc_id, text) frame;
     see the registered query's docstring for semantics.
 
-    r21 (guide §2.4/§2.5): repartition the corpus by CPU budget ONCE up
-    front — gram explosion is CPU-bound string work that parquet's
-    byte-based splits under-parallelize (stage attribution: the whole
-    explode+count ran as ONE 2.7 s task), and hash-partitioning on
-    doc_id satisfies BOTH downstream groupings (doc_id is a prefix of
-    (doc_id, g)), so the two aggregation exchanges disappear: the plan
-    goes scan -> one exchange -> explode+count+reduce with no further
-    shuffle (plan diff: plans/r21/text_repetition_gopher_*). Counts are
-    partitioning-independent. r22: gated via io.cpu_spread with
-    keep_exchange=True — this exchange replaces the (doc_id, g) gram
-    exchange, which carries exploded 3-grams (MORE bytes than the raw
-    docs), so it stays at any scale; on the wide path its width comes
-    from shuffle.partitions + AQE instead of clamping to core count."""
+    Gram explosion is CPU-bound (io.cpu_spread), and hash-partitioning
+    on doc_id satisfies BOTH downstream groupings (doc_id is a prefix of
+    (doc_id, g)), so the plan is scan -> one exchange -> explode + count
+    + reduce. keep_exchange: this exchange replaces the (doc_id, g) one,
+    which carries exploded 3-grams (more bytes than the raw docs), so it
+    stays on a wide scan too. Counts are partitioning-independent."""
     d = cpu_spread(d, "doc_id", keep_exchange=True)
     words = F.split("text", " ")
     grams = d.select(

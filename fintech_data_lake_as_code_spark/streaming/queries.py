@@ -1746,13 +1746,8 @@ class IncrementalDedupIndex:
         # admit first (idempotent overwrite), then read the STORED arrays
         # back: the shingled frame feeds the plan's verify legs — one
         # parquet generation beats recomputing the CPU-bound shingling.
-        # Repartition by CPU budget first: a micro-batch arrives as ONE
-        # source file -> one partition, and shingling is CPU-bound string
-        # work (_corpus's rationale) — without the spread it runs on a
-        # single core.
-        # r22: width-preserving (max(cores, shuffle.partitions)) — a
-        # micro-batch is bounded by the trigger, so the spread is always
-        # right, but it must never narrow below the configured width
+        # A micro-batch arrives as ONE source file -> one partition, and
+        # shingling is CPU-bound (io.width_preserving_spread).
         (
             width_preserving_spread(batch_df, "doc_id")
             .select(

@@ -1,8 +1,11 @@
 #!/usr/bin/env python3
-"""Interleaved A/B of any registry key's io.cpu_spread call sites in ONE
-session: "old" patches cpu_spread to identity (pre-r21/r22 shape), "new"
-leaves it active. Alternating pairs, noop-sink timed, CPU probe before
-and after.
+"""Interleaved A/B of any registry key's io.cpu_spread (or
+io.width_preserving_spread) call sites in ONE session: "old" patches the
+helper to identity in every loaded engine module that holds it, "new"
+leaves it active. The arms alternate which runs first in each pair; the
+A/B refuses to time when the two arms' normalized plans are identical
+(the patch did not reach the key's spread). Noop-sink timed, CPU probe
+before and after.
 
 Usage: python scripts/ab_spread_toggle.py --key profile_columns [--pairs 5]
 """
@@ -31,7 +34,10 @@ def main() -> int:
     )
     args = ap.parse_args()
 
+    from capture_plans import normalize
     from fintech_data_lake_as_code_spark import io as io_mod
+    from fintech_data_lake_as_code_spark.io import SCRATCH_ROOT
+    from fintech_data_lake_as_code_spark.plans.explain import formatted_plan
     from fintech_data_lake_as_code_spark.registry import all_queries
     from fintech_data_lake_as_code_spark.session import get_spark
 
@@ -52,25 +58,33 @@ def main() -> int:
         t.sort()
         return t[1]
 
-    # every operator module that imported cpu_spread by name needs the
-    # patch applied to ITS namespace too
-    import fintech_data_lake_as_code_spark.operators as ops_pkg
-    import importlib
-    import pkgutil
-
-    op_mods = [
-        importlib.import_module(f"{ops_pkg.__name__}.{m.name}")
-        for m in pkgutil.iter_modules(ops_pkg.__path__)
+    # every engine module that imported the helper by name needs the
+    # patch applied to ITS namespace too (operators, functions, streaming)
+    pkg = io_mod.__name__.split(".")[0]
+    holders = [
+        m for name, m in list(sys.modules.items())
+        if name.split(".")[0] == pkg
+        and getattr(m, args.which, None) is real_spread
     ]
 
     def set_spread(active: bool):
         f = real_spread if active else (
             lambda df, *k, keep_exchange=False: df
         )
-        setattr(io_mod, args.which, f)
-        for m in op_mods:
-            if hasattr(m, args.which):
-                setattr(m, args.which, f)
+        for m in holders:
+            setattr(m, args.which, f)
+
+    def plan(variant: str) -> str:
+        set_spread(variant == "new")
+        try:
+            return normalize(formatted_plan(fn(spark, args.sf)), SCRATCH_ROOT)
+        finally:
+            set_spread(True)
+
+    if plan("old") == plan("new"):
+        print(f"{args.key}: both arms plan identically, so {args.which} "
+              "is not on this key's path; not timing", file=sys.stderr)
+        return 1
 
     def run(variant: str) -> float:
         set_spread(variant == "new")
@@ -87,8 +101,12 @@ def main() -> int:
     pre = probe()
     pairs = []
     for i in range(args.pairs):
-        a = run("old")
-        b = run("new")
+        if i % 2:
+            b = run("new")
+            a = run("old")
+        else:
+            a = run("old")
+            b = run("new")
         pairs.append((a, b))
         print(f"pair {i}: old {a:.3f}  new {b:.3f}  ratio {b/a:.2f}",
               flush=True)

@@ -6,9 +6,18 @@ plans/<tag>/<key>_<suffix>.txt — the optimization-round evidence trail
 against these files.
 
 Usage:
-    python scripts/capture_plans.py --keys k1,k2[,...] --suffix before
+    python scripts/capture_plans.py [--keys k1,k2,...] --suffix before
                                     [--sf /root/testdata/sf0.1]
-                                    [--out plans/r21]
+                                    [--out plans/r21] [--normalize]
+
+`--keys` defaults to every registered key. `--normalize` rewrites the
+parts of a plan that change from run to run (expression ids `#123`,
+`plan_id=N`, RDD ids, the scratch root and `pid<N>` directories), so two
+captures diff clean exactly when the plans are the same:
+
+    python scripts/capture_plans.py --normalize --sf SF --out A --suffix p
+    (same again from the other checkout into B)
+    diff -r A B
 
 Notes:
 - Keys whose registered form materializes driver-side (e.g.
@@ -23,11 +32,21 @@ from __future__ import annotations
 
 import argparse
 import os
+import re
 import sys
 
 REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if REPO_ROOT not in sys.path:
     sys.path.insert(0, REPO_ROOT)
+
+
+def normalize(plan: str, scratch_root: str) -> str:
+    """Strip the run-to-run noise from a formatted plan."""
+    plan = plan.replace(scratch_root.rstrip("/"), "<scratch>")
+    plan = re.sub(r"#\d+L?", "#", plan)
+    plan = re.sub(r"plan_id=\d+", "plan_id=", plan)
+    plan = re.sub(r"\bpid\d+\b", "pid<N>", plan)
+    return re.sub(r"RDD\[\d+\]", "RDD[]", plan)
 
 
 def _lazy_plan_df(spark, sf_dir: str, key: str):
@@ -46,19 +65,21 @@ def _lazy_plan_df(spark, sf_dir: str, key: str):
 
 def main() -> int:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--keys", required=True)
+    ap.add_argument("--keys", default="", help="default: every key")
     ap.add_argument("--sf", default="/root/testdata/sf0.1")
     ap.add_argument("--out", default="plans/r21")
     ap.add_argument("--suffix", default="before")
+    ap.add_argument("--normalize", action="store_true")
     args = ap.parse_args()
-    keys = [k for k in args.keys.split(",") if k]
 
+    from fintech_data_lake_as_code_spark.io import SCRATCH_ROOT
     from fintech_data_lake_as_code_spark.registry import all_queries
     from fintech_data_lake_as_code_spark.session import get_spark
 
     spark = get_spark("fintech-data-lake-plan-capture")
     spark.sparkContext.setLogLevel("ERROR")
     queries = all_queries()
+    keys = [k for k in args.keys.split(",") if k] or list(queries)
     unknown = [k for k in keys if k not in queries]
     if unknown:
         ap.error(f"unknown keys: {unknown}")
@@ -77,6 +98,8 @@ def main() -> int:
             )
         except Exception as ex:  # capture the failure, keep going
             plan = f"PLAN CAPTURE FAILED: {type(ex).__name__}: {ex}\n"
+        if args.normalize:
+            plan = normalize(plan, SCRATCH_ROOT)
         path = os.path.join(outdir, f"{key}_{args.suffix}.txt")
         with open(path, "w") as fh:
             fh.write(plan)

@@ -1122,6 +1122,36 @@ def test_triangle_counts_corners_in_one_pass(spark, sf_dir):
     )
 
 
+def test_cluster_cc_edges_in_one_pass(spark, sf_dir, monkeypatch):
+    """dedup_cluster_cc builds both edge directions with ONE explode over
+    the near-dup pairs: a union of two projections of the pairs planned
+    part of the PPJoin pair generation twice. The edge list's logical
+    plan may hold no Union beyond those in the pairs' own plan (the
+    corpus is docs unioned with planted twins)."""
+    from fintech_data_lake_as_code_spark.operators import dedup
+
+    seen = {}
+    real_pairs, real_cc = dedup.dedup_ngram_jaccard, dedup.connected_components
+
+    def pairs_spy(*args):
+        seen["pairs"] = real_pairs(*args)
+        return seen["pairs"]
+
+    def cc_spy(edges, *args, **kwargs):
+        seen["edges"] = edges
+        return real_cc(edges, *args, **kwargs)
+
+    monkeypatch.setattr(dedup, "dedup_ngram_jaccard", pairs_spy)
+    monkeypatch.setattr(dedup, "connected_components", cc_spy)
+    dedup.dedup_cluster_cc(spark, sf_dir)
+
+    def unions(df):
+        return str(df._jdf.queryExecution().analyzed()).count("Union")
+
+    assert unions(seen["pairs"]) >= 1  # the corpus union is visible
+    assert unions(seen["edges"]) == unions(seen["pairs"])
+
+
 def test_cpu_spread_gates_on_scan_layout(spark, sf_dir, tmp_path):
     """r22: the CPU-budget corpus spreads are GATED on the observed scan
     layout (io.cpu_spread). Small single-file inputs still get the r21
@@ -1150,6 +1180,28 @@ def test_cpu_spread_gates_on_scan_layout(spark, sf_dir, tmp_path):
 
     plan_keep = formatted_plan(cpu_spread(wide, "vec_id", keep_exchange=True))
     assert re.search(r"hashpartitioning\(vec_id", plan_keep), plan_keep
+    assert "REPARTITION_BY_NUM" not in plan_keep, plan_keep
+
+
+def test_cpu_spread_failing_probe_cannot_narrow(spark, sf_dir, monkeypatch):
+    """A layout probe that raises leaves the layout unknown, and an
+    unknown layout counts as wide: cpu_spread passes the input through,
+    and keep_exchange callers keep their AQE-width exchange. It never
+    falls back to the repartition(cores, key) that narrows a wide scan."""
+    from fintech_data_lake_as_code_spark.io import cpu_spread, load
+
+    small = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    # with a working probe this single small file is spread
+    assert "REPARTITION_BY_NUM" in formatted_plan(cpu_spread(small, "vec_id"))
+
+    def broken_probe(self):
+        raise RuntimeError("layout probe unavailable")
+
+    monkeypatch.setattr(type(small), "inputFiles", broken_probe)
+    assert formatted_plan(cpu_spread(small, "vec_id")) == formatted_plan(small)
+
+    plan_keep = formatted_plan(cpu_spread(small, "vec_id", keep_exchange=True))
+    assert "REPARTITION_BY_COL" in plan_keep, plan_keep
     assert "REPARTITION_BY_NUM" not in plan_keep, plan_keep
 
 

@@ -22,19 +22,41 @@ REPO_ROOT = os.path.dirname(os.path.abspath(__file__))
 if REPO_ROOT not in sys.path:
     sys.path.insert(0, REPO_ROOT)
 
-# Median of the calibration probe on an idle local[32] sandbox (measured
-# round 6). If the hardware profile changes, re-measure and update.
+# Median of `_probe_cpu` on an idle local[32] sandbox (measured round 6).
+# If the hardware profile changes, re-measure and update.
 _CAL_REF_SEC = 0.18
 
-# Median of the SHUFFLE calibration probe (measured round 12 — see
-# _calibrate_shuffle). The CPU probe above is pure codegen and blind to
-# degraded shuffle/disk service: twice (r10 extras, r12 headline) a
-# uniform inflation of shuffle-heavy keys with a flat CPU ratio took
-# extra adjudication because nothing in the artifact distinguished
-# "box I/O degraded" from "operator regressed". The ratio pair
-# separates the cases: CPU flat + shuffle high => environment;
-# both flat + one key moved => real regression.
+# Median of `_probe_shuffle` (measured round 12). The CPU probe is pure
+# codegen and blind to degraded shuffle/disk service; the ratio pair
+# separates the cases: CPU flat + shuffle high => environment; both flat
+# + one key moved => real regression.
 _SHUF_REF_SEC = 0.79
+
+
+def _probe_cpu(spark) -> float:
+    """Seconds for one IO-free, pure-codegen job (range(2e8) two-sum): its
+    time depends only on the CPU the box has free, never on engine code."""
+    t0 = time.perf_counter()
+    spark.range(200_000_000).selectExpr(
+        "sum(id % 7)", "sum(id * 3 + 1)"
+    ).collect()
+    return time.perf_counter() - t0
+
+
+def _probe_shuffle(spark) -> float:
+    """Seconds for one full shuffle write+fetch cycle (64 map x 64 reduce
+    over 20M longs): the shuffle-file service the CPU probe can't see."""
+    t0 = time.perf_counter()
+    spark.range(20_000_000).repartition(64, "id").selectExpr(
+        "sum(id)"
+    ).collect()
+    return time.perf_counter() - t0
+
+
+def _probe_median(probe, spark, reps: int) -> float:
+    """Median of `reps` runs of `probe`, in seconds rounded to the ms."""
+    return round(sorted(probe(spark) for _ in range(reps))[reps // 2], 3)
+
 
 # Headline set: one representative per heavy operator family; extended as
 # families land. Order: cheap scan first (warms the JVM/code paths).
@@ -203,42 +225,14 @@ def main() -> None:
         "noop"
     ).save()
 
-    # Noise calibration: a fixed, IO-free, pure-codegen probe timed before
-    # the headline loop. Its runtime depends only on the box's available
-    # CPU at bench time, never on engine code, so round-over-round its
-    # ratio to CAL_REF_SEC separates sandbox load (uniform inflation of
-    # everything, calibration included) from real regressions (one query
-    # moves, calibration doesn't). CAL_REF_SEC is the median measured on
-    # an idle local[32] box; `calibration_ratio` ~1.0 means comparable
-    # conditions, and `queries_normalized` rescales each median by the
-    # ratio for cross-round comparison.
-    CAL_REF_SEC = _CAL_REF_SEC
-
-    def _calibrate() -> float:
-        runs = []
-        for _ in range(5):
-            t0 = time.perf_counter()
-            spark.range(200_000_000).selectExpr(
-                "sum(id % 7)", "sum(id * 3 + 1)"
-            ).collect()
-            runs.append(time.perf_counter() - t0)
-        return round(sorted(runs)[len(runs) // 2], 3)
-
-    def _calibrate_shuffle() -> float:
-        # one full shuffle write+fetch cycle (64 map x 64 reduce over
-        # 20M longs): times the shuffle-file service the CPU probe
-        # can't see. Same median-of-5 discipline.
-        runs = []
-        for _ in range(5):
-            t0 = time.perf_counter()
-            spark.range(20_000_000).repartition(64, "id").selectExpr(
-                "sum(id)"
-            ).collect()
-            runs.append(time.perf_counter() - t0)
-        return round(sorted(runs)[len(runs) // 2], 3)
-
-    cal_sec = _calibrate()
-    cal_ratio = round(cal_sec / CAL_REF_SEC, 3)
+    # Noise calibration, timed before the headline loop: round-over-round
+    # the probe's ratio to _CAL_REF_SEC separates sandbox load (uniform
+    # inflation of everything, calibration included) from real
+    # regressions (one query moves, calibration doesn't).
+    # `calibration_ratio` ~1.0 means comparable conditions, and
+    # `queries_normalized` rescales each median by the ratio.
+    cal_sec = _probe_median(_probe_cpu, spark, 5)
+    cal_ratio = round(cal_sec / _CAL_REF_SEC, 3)
     # Degraded-box retry (VERDICT r13 #5): two consecutive rounds were
     # recorded on shuffle-degraded boxes (pre-ratios 1.26, 1.39) and
     # every cross-round per-key comparison needed manual normalization.
@@ -247,7 +241,7 @@ def main() -> None:
     # on the LAST probe either way, with the full attempt trail recorded
     # so a still-degraded run is self-describing in the artifact.
     SHUF_DEGRADED = 1.15
-    shuf_sec = _calibrate_shuffle()
+    shuf_sec = _probe_median(_probe_shuffle, spark, 5)
     shuf_ratio = round(shuf_sec / _SHUF_REF_SEC, 3)
     shuffle_attempts = [shuf_ratio]
     while shuf_ratio > SHUF_DEGRADED and len(shuffle_attempts) < 4:
@@ -257,11 +251,11 @@ def main() -> None:
             file=sys.stderr,
         )
         time.sleep(20)
-        shuf_sec = _calibrate_shuffle()
+        shuf_sec = _probe_median(_probe_shuffle, spark, 5)
         shuf_ratio = round(shuf_sec / _SHUF_REF_SEC, 3)
         shuffle_attempts.append(shuf_ratio)
     print(
-        f"# calibration: median {cal_sec:.3f}s (ref {CAL_REF_SEC}s, "
+        f"# calibration: median {cal_sec:.3f}s (ref {_CAL_REF_SEC}s, "
         f"ratio {cal_ratio:.2f}); shuffle {shuf_sec:.3f}s "
         f"(ref {_SHUF_REF_SEC}s, ratio {shuf_ratio:.2f}, "
         f"attempts {shuffle_attempts})",
@@ -327,27 +321,13 @@ def main() -> None:
     # Same median-of-3 discipline; ~0.5 s untimed cost per block.
     block_cpu: dict[str, float] = {}
 
-    def _probe_shuffle_once() -> float:
-        t0 = time.perf_counter()
-        spark.range(20_000_000).repartition(64, "id").selectExpr(
-            "sum(id)"
-        ).collect()
-        return round(time.perf_counter() - t0, 3)
-
-    def _probe_cpu_once() -> float:
-        t0 = time.perf_counter()
-        spark.range(200_000_000).selectExpr(
-            "sum(id % 7)", "sum(id * 3 + 1)"
-        ).collect()
-        return round(time.perf_counter() - t0, 3)
-
     def _time_block(keys: list[str], tag: str) -> dict[str, float]:
         out: dict[str, float] = {}
         if keys:
-            reps = sorted(_probe_shuffle_once() for _ in range(3))
-            block_shuffle[tag] = round(reps[1] / _SHUF_REF_SEC, 3)
-            cpu_reps = sorted(_probe_cpu_once() for _ in range(3))
-            block_cpu[tag] = round(cpu_reps[1] / CAL_REF_SEC, 3)
+            shuf = _probe_median(_probe_shuffle, spark, 3)
+            block_shuffle[tag] = round(shuf / _SHUF_REF_SEC, 3)
+            cpu = _probe_median(_probe_cpu, spark, 3)
+            block_cpu[tag] = round(cpu / _CAL_REF_SEC, 3)
         for key in keys:
             fn = queries.get(key)
             if fn is None:
@@ -394,9 +374,9 @@ def main() -> None:
     # were flat). A post-ratio far above the pre-ratio marks the run as
     # load-contaminated; normalization stays on the PRE ratio for
     # cross-round comparability.
-    cal_post_sec = _calibrate()
-    cal_post_ratio = round(cal_post_sec / CAL_REF_SEC, 3)
-    shuf_post_sec = _calibrate_shuffle()
+    cal_post_sec = _probe_median(_probe_cpu, spark, 5)
+    cal_post_ratio = round(cal_post_sec / _CAL_REF_SEC, 3)
+    shuf_post_sec = _probe_median(_probe_shuffle, spark, 5)
     shuf_post_ratio = round(shuf_post_sec / _SHUF_REF_SEC, 3)
     print(
         f"# calibration (post): median {cal_post_sec:.3f}s "
@@ -415,7 +395,7 @@ def main() -> None:
             "calibration": {
                 "probe": "range(2e8) two-sum codegen, median of 5",
                 "sec": cal_sec,
-                "ref_sec": CAL_REF_SEC,
+                "ref_sec": _CAL_REF_SEC,
                 "ratio": cal_ratio,
                 "post_sec": cal_post_sec,
                 "post_ratio": cal_post_ratio,

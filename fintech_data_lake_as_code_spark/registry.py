@@ -6,6 +6,12 @@ equivalent DuckDB oracle SQL. `__spark_entry__.queries()` / `oracle_sql()`
 are thin views over this registry, and the pytest differential harness
 iterates it directly.
 
+`registry()` returns keys in grading order: by the round of each key's
+latest green verdict in the committed CORRECTNESS_r*.json files, oldest
+first, with never-green and `_STALE_SINCE`-marked keys ahead of all and
+registration order breaking ties. Without those files it is plain
+registration order.
+
 Oracle-parity conventions (keep these or the value-hash comparison breaks):
 - alias EVERY computed column, identically in Spark and SQL;
 - round float aggregates (sums/avgs/scores) in BOTH engines;
@@ -17,6 +23,11 @@ Oracle-parity conventions (keep these or the value-hash comparison breaks):
 
 from __future__ import annotations
 
+import functools
+import glob
+import json
+import os
+import re
 from dataclasses import dataclass
 from typing import Callable, Optional
 
@@ -51,11 +62,10 @@ def query(name: str, oracle: Optional[str] = None) -> Callable[[SparkQuery], Spa
 def _load_all_modules() -> None:
     """Import every module that registers queries (idempotent).
 
-    Import order fixes intra-rank registration order (see `registry()`):
-    within the same verdict-age rank, earlier-imported modules grade
-    first. Keys ranked by `_VERDICT_ROUND` age are mostly order-insensitive;
-    the order below keeps cheap scan/function families ahead of streaming
-    (slow to grade, each query runs a real micro-batch) within a rank.
+    Import order fixes registration order, the tie-break in `registry()`:
+    within the same latest-green round, earlier-imported modules grade
+    first. The order below keeps cheap scan/function families ahead of
+    streaming (slow to grade, each query runs a real micro-batch).
     """
     from .sources import jdbc  # noqa: F401
     from .functions import scalar, udfs  # noqa: F401
@@ -79,186 +89,67 @@ def _load_all_modules() -> None:
     )
 
 
-# Round of each key's latest green driver verdict (rows+schema+hash),
-# from CORRECTNESS_r01-r21.json. The driver grades a bounded prefix (50)
-# of the registry per round, so ranking by verdict AGE keeps every
-# verdict fresh on a rolling basis: never-graded keys and keys whose
-# defining code changed since their last green round grade first, then
-# the oldest-verdict keys, newest last.
-# r22 fold: rounds 20 AND 21 graded the IDENTICAL 50-key prefix (the
-# optimization round r21 deliberately made no registry edits, so the
-# ranking never rotated) — those 50 keys fold straight to 21, their
-# latest green. Census: 45@r17 / 50@r18 / 49@r19 / 50@r21. The r17
-# floor is 4 rounds old, so ALL r17 keys must grade or defer this
-# round: 21 stale-marked keys (below) + 39 non-stale floor keys = 60
-# demand against the 50 budget -> 10 floor keys defer one round
-# (_DEFER_NEXT_ROUND, pinned by tests/test_registry_vintage.py).
-_VERDICT_ROUND: dict[str, int] = {
-    # round 17 greens — the floor; every key here is graded or
-    # explicitly deferred this round
-    **dict.fromkeys(
-        [
-            "agg_approx_distinct", "agg_distinct", "fn_bitwise",
-            "fn_hash", "fn_json", "fn_map_struct", "fn_variant",
-            "graph_pagerank", "graph_triangle_count", "limit_topk",
-            "multimodal_cols", "multimodal_decode",
-            "multimodal_framesample", "project_rename_cast",
-            "sample_stratified_split", "scan_python_datasource",
-            "set_distinct_ops", "set_union_all", "sim_maxsim_ann",
-            "sim_topk_cosine", "sim_topk_lsh", "sort_multi",
-            "text_bpe_tokenize", "text_chunk", "text_idf_rarity",
-            "text_langid", "text_pack_sequences", "text_quality",
-            "text_redact_pii", "text_stats", "token_count_bpe",
-            "topk_per_group", "udf_cogrouped", "udf_scalar_python",
-            "udf_vectorized_agg", "udtf_expand", "win_asof_gap_fill",
-            "win_distribution", "win_funnel_conversion",
-            "win_islands_consecutive", "win_lag_lead",
-            "win_range_interval", "win_ranking", "win_running_frame",
-            "win_sessionize",
-        ],
-        17,
-    ),
-    # round 18 greens
-    **dict.fromkeys(
-        [
-            "agg_approx_percentile", "agg_histogram_bins",
-            "agg_retention_cohort", "agg_rolling_distinct",
-            "agg_sketch_cms", "agg_sketch_hll", "cdc_gdpr_erasure",
-            "dedup_containment", "dedup_incremental",
-            "dedup_near_minhash", "dedup_ngram_jaccard",
-            "dedup_simhash", "fn_datetime", "fn_string", "fn_url",
-            "join_asof_nearest", "join_bucketed_colocated",
-            "join_skew_salted", "profile_columns",
-            "sample_bootstrap_means", "sample_split_leakage_safe",
-            "sample_weighted_priority", "scan_avro", "scan_csv",
-            "scan_json_corrupt", "scan_json_lines", "scan_orc",
-            "scan_parquet", "scan_partition_pruned",
-            "scan_schema_evolution", "scan_text", "scan_xml",
-            "set_bag_ops", "sink_compacted", "sink_compression_codecs",
-            "sink_partitioned", "sink_sorted_lake", "sink_zorder_lake",
-            "sql_pricing_summary", "stream_bronze_ingest",
-            "stream_dedupe", "stream_join_static", "stream_rate_sim",
-            "stream_session", "stream_sliding",
-            "stream_stateful_freeze", "stream_stream_join",
-            "stream_tumbling", "text_decontaminate", "text_ngram_freq",
-        ],
-        18,
-    ),
-    # round 19 greens
-    **dict.fromkeys(
-        [
-            "agg_benford_digits", "agg_bitmap_distinct", "agg_gini",
-            "agg_kanonymity", "agg_mode_exact", "agg_pareto_8020",
-            "agg_regression_ols", "datagen_customeractivity",
-            "dedup_cluster_cc", "dedup_embedding_cosine",
-            "dedup_keep_best", "dedup_paragraph",
-            "dedup_semantic_cluster", "dq_expectations",
-            "embedding_quantize_int8", "fn_collation", "fn_conditional",
-            "fn_crypto", "fn_math_decimal", "fn_try_ansi",
-            "join_asof_forward", "join_fuzzy_edit_distance",
-            "join_lateral", "join_spatial_grid",
-            "sample_negative_pairs", "sample_temperature_mix",
-            "scan_binaryfile", "sim_maxsim_multivector", "sim_topk_ivf",
-            "sim_topk_ivf_kmeans", "sql_recursive_cte",
-            "stream_backfill_availablenow", "stream_dedup_incremental",
-            "stream_foreachbatch_merge", "stream_scd2_apply",
-            "stream_tws_topk_state", "stream_watermark_late",
-            "subquery_family", "text_fingerprint",
-            "text_repetition_gopher", "text_zipf_fit",
-            "udf_map_in_arrow", "win_anomaly_zscore", "win_drawdown",
-            "win_ewma", "win_match_recognize", "win_resample_interp",
-            "win_rfm_score", "win_transition_matrix",
-        ],
-        19,
-    ),
-    # round 21 greens — freshest, grade last (CORRECTNESS_r20 and _r21
-    # graded this same 50-key prefix; 21 is each key's latest green)
-    **dict.fromkeys(
-        [
-            "agg_global", "agg_groupby", "agg_having",
-            "agg_maxby_latest", "agg_percentile", "agg_pivot",
-            "agg_rollup_cube_gsets", "agg_stats_corr",
-            "agg_time_rollup", "cdc_dedupe_batch",
-            "cdc_envelope_roundtrip", "cdc_incremental_agg",
-            "cdc_latest_state", "cdc_merge_upsert",
-            "cdc_scd2_intervals", "cdc_snapshot_diff",
-            "datagen_account_sample", "dedup_exact",
-            "filter_null_domain", "filter_pred", "fn_array",
-            "join_anti", "join_asof_backward", "join_asof_interval",
-            "join_broadcast", "join_cross_topk", "join_inner_equi",
-            "join_left_right_full", "join_multiway",
-            "join_range_banded", "join_scd2_pointintime", "join_semi",
-            "join_theta_range", "reshape_unpivot",
-            "rule_b10_cross_sell", "rule_b1_city_hop",
-            "rule_b2_session_overlap", "rule_b3_overdraft_freeze",
-            "rule_b4_first_forex", "rule_b5_limit_3days",
-            "rule_b6_enquiry_intent", "rule_b7_regular_forex",
-            "rule_b8_regular_investor", "rule_b9_large_investor",
-            "scan_jdbc", "sink_write_audit_publish",
-            "stream_observe_metrics", "stream_python_datasource",
-            "stream_transform_with_state", "text_bpe_train",
-        ],
-        21,
-    ),
+# Each grading round checks a bounded prefix (50 keys) of `registry()`
+# and records each key's verdict in CORRECTNESS_r{N}.json at the repo
+# root. Ranking keys by the round of their latest green verdict, oldest
+# first, keeps every verdict fresh on a rolling basis.
+_VERDICT_DIR = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+# The one hand-set input: key -> the last round whose green verdict does
+# not cover the key's current code. A marked key grades with the
+# never-green keys until a newer CORRECTNESS file grades it green; the
+# mark then expires by itself.
+_STALE_SINCE: dict[str, int] = {
+    # edge list rebuilt as one explode instead of a union of projections
+    "dedup_cluster_cc": 22,
 }
 
-# Keys whose latest green verdict predates code they depend on — the old
-# verdict no longer covers the code that ships, so they grade with the
-# never-graded keys. This is the r21/r22 optimization-touched cohort
-# (VERDICT r21 "Next round" #8): the r21 spreads / BPE induction /
-# triangle explode / int8 hoist changes, plus the r22 changes (gated
-# spreads via io.cpu_spread / width_preserving_spread, the id_a PPJoin
-# verify spread, the profile_columns spread, kmeans initSteps=1, the
-# pyavro Arrow marshalling, PageRank checkpoint thinning;
-# cdc_incremental_agg was touched then REVERTED to its graded shape —
-# kept here so the round's grade re-certifies the revert), all landed
-# AFTER these keys' last green grades — their oracle status so far
-# rests on pytest + builder rehearsals only. text_bpe_train is NOT
-# here: it was in the r20/r21 graded cohort, so its green already
-# covers the r21 driver-side induction. scan_jdbc's r19 stale-mark
-# re-graded green in r20 AND r21 — dropped.
-_STALE_REGRADE = frozenset({
-    "cdc_incremental_agg",
-    "dedup_cluster_cc", "dedup_containment",
-    "dedup_embedding_cosine", "dedup_incremental",
-    "dedup_keep_best", "dedup_near_minhash",
-    "dedup_ngram_jaccard", "dedup_paragraph",
-    "dedup_semantic_cluster", "dedup_simhash",
-    "embedding_quantize_int8",
-    "graph_pagerank", "graph_triangle_count", "profile_columns",
-    "sample_split_leakage_safe", "scan_avro",
-    "sim_maxsim_ann", "sim_maxsim_multivector", "sim_topk_cosine",
-    "sim_topk_ivf", "sim_topk_ivf_kmeans", "sim_topk_lsh",
-    "stream_dedup_incremental", "text_bpe_tokenize",
-    "text_decontaminate", "text_repetition_gopher",
-    "udf_vectorized_agg",
-})
 
-# Budget overflow this round: 28 rank-(0,0) stales + 38 non-stale r17
-# floor keys = 66 demanded against the 50-key budget -> exactly 16
-# floor keys defer one round (the registration-order tail, so the
-# prefix keeps the earliest-registered floor keys). They grade first
-# next round with the floor at r17 still intact for them.
-_DEFER_NEXT_ROUND = frozenset({
-    "agg_approx_distinct", "agg_distinct", "multimodal_cols",
-    "multimodal_decode", "multimodal_framesample",
-    "project_rename_cast", "sample_stratified_split",
-    "scan_python_datasource", "text_chunk", "text_idf_rarity",
-    "text_langid", "text_pack_sequences", "text_quality",
-    "text_redact_pii", "text_stats", "token_count_bpe",
-})
+def _is_green(verdict: object) -> bool:
+    return (
+        isinstance(verdict, dict)
+        and bool(
+            verdict.get("rows_match")
+            and verdict.get("schema_match")
+            and verdict.get("hash_match")
+        )
+        and not verdict.get("err")
+    )
 
 
-def _rank(name: str) -> tuple[int, int]:
-    if name in _STALE_REGRADE or name not in _VERDICT_ROUND:
-        return (0, 0)
-    return (_VERDICT_ROUND[name], 1 if name in _DEFER_NEXT_ROUND else 0)
+@functools.lru_cache(maxsize=None)
+def _latest_green(verdict_dir: str) -> dict[str, int]:
+    """key -> the latest round whose CORRECTNESS file grades it green.
+
+    Files are read in numeric round order (r9 < r10 < r100). An unreadable
+    file is skipped so that importing the registry never fails; the
+    registry tests fail on it instead."""
+    rounds = []
+    for path in glob.glob(os.path.join(verdict_dir, "CORRECTNESS_r*.json")):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", os.path.basename(path))
+        if m:
+            rounds.append((int(m.group(1)), path))
+    latest: dict[str, int] = {}
+    for rnd, path in sorted(rounds):
+        try:
+            with open(path) as f:
+                verdicts = json.load(f)
+        except (OSError, ValueError):
+            continue
+        if isinstance(verdicts, dict):
+            latest.update((k, rnd) for k, v in verdicts.items() if _is_green(v))
+    return latest
+
+
+def _rank(name: str, latest: dict[str, int]) -> int:
+    rnd = latest.get(name, 0)
+    return 0 if rnd <= _STALE_SINCE.get(name, 0) else rnd
 
 
 def registry() -> dict[str, QuerySpec]:
     _load_all_modules()
-    items = sorted(_REGISTRY.items(), key=lambda kv: _rank(kv[0]))
-    return dict(items)
+    latest = _latest_green(_VERDICT_DIR)
+    return dict(sorted(_REGISTRY.items(), key=lambda kv: _rank(kv[0], latest)))
 
 
 def all_queries() -> dict[str, SparkQuery]:

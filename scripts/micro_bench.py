@@ -35,7 +35,13 @@ REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if REPO_ROOT not in sys.path:
     sys.path.insert(0, REPO_ROOT)
 
-from bench import _CAL_REF_SEC, _SHUF_REF_SEC  # noqa: E402
+from bench import (  # noqa: E402
+    _CAL_REF_SEC,
+    _SHUF_REF_SEC,
+    _probe_cpu,
+    _probe_median,
+    _probe_shuffle,
+)
 
 
 def main() -> int:
@@ -107,23 +113,9 @@ def main() -> int:
                 cache_leaks[key] = cache_leaks.get(key, 0) + 1
 
     # ---- probes (bench.py's per-block pair, median-of-3) ----
-    def _shuf_once() -> float:
-        t0 = time.perf_counter()
-        spark.range(20_000_000).repartition(64, "id").selectExpr(
-            "sum(id)"
-        ).collect()
-        return time.perf_counter() - t0
-
-    def _cpu_once() -> float:
-        t0 = time.perf_counter()
-        spark.range(200_000_000).selectExpr(
-            "sum(id % 7)", "sum(id * 3 + 1)"
-        ).collect()
-        return time.perf_counter() - t0
-
     def _probe_pair() -> tuple[float, float]:
-        s = sorted(_shuf_once() for _ in range(3))[1]
-        c = sorted(_cpu_once() for _ in range(3))[1]
+        s = _probe_median(_probe_shuffle, spark, 3)
+        c = _probe_median(_probe_cpu, spark, 3)
         return (
             round(c / _CAL_REF_SEC, 3),
             round(s / _SHUF_REF_SEC, 3),

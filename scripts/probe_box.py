@@ -27,13 +27,18 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 
 REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if REPO_ROOT not in sys.path:
     sys.path.insert(0, REPO_ROOT)
 
-from bench import _CAL_REF_SEC, _SHUF_REF_SEC  # noqa: E402
+from bench import (  # noqa: E402
+    _CAL_REF_SEC,
+    _SHUF_REF_SEC,
+    _probe_cpu,
+    _probe_median,
+    _probe_shuffle,
+)
 
 CPU_CLEAN = 0.75  # BASELINE.md: the 14.4-16.0 s headline band condition
 SHUF_CLEAN = 1.15  # bench.py SHUF_DEGRADED: retry threshold
@@ -45,23 +50,9 @@ def main() -> int:
     spark = get_spark("fintech-data-lake-probe")
     spark.sparkContext.setLogLevel("ERROR")
 
-    def cpu() -> float:
-        t0 = time.perf_counter()
-        spark.range(200_000_000).selectExpr(
-            "sum(id % 7)", "sum(id * 3 + 1)"
-        ).collect()
-        return time.perf_counter() - t0
-
-    def shuf() -> float:
-        t0 = time.perf_counter()
-        spark.range(20_000_000).repartition(64, "id").selectExpr(
-            "sum(id)"
-        ).collect()
-        return time.perf_counter() - t0
-
-    cpu(), shuf()  # JIT/codegen warm-up rep, discarded
-    c = sorted(cpu() for _ in range(3))[1]
-    s = sorted(shuf() for _ in range(3))[1]
+    _probe_cpu(spark), _probe_shuffle(spark)  # JIT/codegen warm-up, discarded
+    c = _probe_median(_probe_cpu, spark, 3)
+    s = _probe_median(_probe_shuffle, spark, 3)
     cr, sr = c / _CAL_REF_SEC, s / _SHUF_REF_SEC
     clean = cr <= CPU_CLEAN and sr <= SHUF_CLEAN
     sys.stdout.write(

@@ -1,21 +1,19 @@
-"""Verdict-freshness invariants over the registry's grading ranks.
+"""Grading-order invariants over the registry's verdict derivation.
 
 The driver grades a 50-key prefix of ``registry()`` per round and records
-the per-key verdicts in ``CORRECTNESS_r{N}.json``. ``_VERDICT_ROUND`` is
-the hand-folded "latest green round" table that ranks keys by verdict age
-so the rolling 50-key window re-certifies the stalest verdicts first.
+the per-key verdicts in ``CORRECTNESS_r{N}.json``. The registry derives
+each key's latest green round from those files and grades the oldest
+verdicts first, after never-green and ``_STALE_SINCE``-marked keys.
 
-These tests make drift loud (VERDICT r7 "Next round" #1/#8):
+These tests re-parse the files independently and check that:
 
-- the fold must agree with the recorded CORRECTNESS files (a key may lag
-  the files by at most ONE round — the round in flight when the fold was
-  last updated);
-- the vintage floor must keep rising: no key's folded verdict may be more
-  than 3 rounds older than the freshest fold (after the r7 fold the floor
-  is r4; after r8's grading it becomes r5, and so on);
-- the 50-key grading prefix must contain EVERY key at the current floor
-  plus every rank-(0,0) key (new / stale-regrade), so one driver round is
-  always enough to lift the floor.
+- the derived latest-green map equals the files' own record;
+- ``registry()`` is sorted by the derived rank, registration order
+  breaking ties;
+- every committed file parses, so the derivation's skip of an unreadable
+  file can never silently reorder the grading prefix;
+- no files means registration order, rounds sort numerically, and a
+  stale mark ranks a key first until a newer file grades it green.
 """
 
 from __future__ import annotations
@@ -29,7 +27,6 @@ import pytest
 from fintech_data_lake_as_code_spark import registry as R
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-PREFIX_BUDGET = 50  # keys the driver grades per round
 
 
 def _green(v: dict) -> bool:
@@ -38,119 +35,116 @@ def _green(v: dict) -> bool:
     ) and not v.get("err")
 
 
+def _round_of(path: str) -> int:
+    return int(os.path.basename(path).split("_r")[1].split(".")[0])
+
+
+def _committed_files() -> list[str]:
+    return glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))
+
+
 @pytest.fixture(scope="module")
 def green_rounds() -> dict[str, list[int]]:
     """key -> sorted rounds with a full green verdict, from the files."""
     greens: dict[str, set[int]] = {}
-    newest = 0
-    for path in sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))):
-        rnd = int(os.path.basename(path).split("_r")[1].split(".")[0])
-        try:
-            data = json.load(open(path))
-        except (json.JSONDecodeError, OSError):
-            continue
-        newest = max(newest, rnd)
+    for path in _committed_files():
+        with open(path) as f:
+            data = json.load(f)
         for key, verdict in data.items():
             if isinstance(verdict, dict) and _green(verdict):
-                greens.setdefault(key, set()).add(rnd)
+                greens.setdefault(key, set()).add(_round_of(path))
     assert greens, "no CORRECTNESS files found — run from the repo root"
-    out = {k: sorted(v) for k, v in greens.items()}
-    out["__newest__"] = [newest]
-    return out
+    return {k: sorted(v) for k, v in greens.items()}
 
 
-def test_fold_matches_recorded_verdicts(green_rounds):
-    """The fold equals latest-green-as-of-the-folded-round, <=1 round old.
-
-    The driver writes CORRECTNESS_r{N}.json at the END of round N; the
-    r{N} fold lands at the START of round N+1. So the fold may lag the
-    newest file by at most one round, and within the rounds it HAS
-    folded, every entry must be the key's true latest green."""
-    newest_file_round = green_rounds["__newest__"][0]
-    folded_max = max(R._VERDICT_ROUND.values())
-    assert newest_file_round - folded_max <= 1, (
-        f"fold covers only r<= {folded_max} but CORRECTNESS files reach "
-        f"r{newest_file_round} — fold is >1 round stale, update "
-        "_VERDICT_ROUND (and refresh _STALE_REGRADE/_DEFER_NEXT_ROUND)"
-    )
-    for key, folded in R._VERDICT_ROUND.items():
-        greens = [
-            r for r in green_rounds.get(key, []) if r <= folded_max
-        ]
-        assert greens, (
-            f"{key} is folded at r{folded} but has no green verdict in "
-            f"any CORRECTNESS file up to r{folded_max}"
-        )
-        assert folded == max(greens), (
-            f"{key}: latest green within folded rounds is r{max(greens)} "
-            f"but fold says r{folded}"
-        )
+def _registration_order() -> list[str]:
+    R._load_all_modules()
+    return list(R._REGISTRY)
 
 
-def test_vintage_floor_is_rolling():
-    """Folded verdicts stay within the rolling window the budget allows.
-
-    With up to 4x50 = 200 grading slots per 4-round window, a spread of
-    3 is achievable while the surface is <= 200 keys MINUS the round's
-    rank-(0,0) demand; the explicit `_DEFER_NEXT_ROUND` set absorbs the
-    overflow (verified exactly in test_prefix_covers_floor_and_rank0).
-    A key may sit past the window only while it is explicitly deferred
-    (at most one round, by construction) or already at the head of the
-    current grading prefix — i.e. the staleness is being lifted THIS
-    round. Anything else is silent drift and fails loudly."""
-    newest = max(R._VERDICT_ROUND.values())
-    prefix = set(list(R.registry().keys())[:PREFIX_BUDGET])
-    over = {
-        k
-        for k, v in R._VERDICT_ROUND.items()
-        if newest - v > 3
-        and k not in R._DEFER_NEXT_ROUND
-        and k not in prefix
-    }
-    assert not over, (
-        f"keys older than the 4-round window, not explicitly deferred, "
-        f"and not in this round's grading prefix: {sorted(over)}"
-    )
+def _write_round(d, rnd: int, verdicts: dict[str, bool]) -> None:
+    ok = {"rows_match": True, "schema_match": True, "hash_match": True,
+          "err": None}
+    bad = dict(ok, hash_match=False)
+    with open(os.path.join(d, f"CORRECTNESS_r{rnd}.json"), "w") as f:
+        json.dump({k: ok if g else bad for k, g in verdicts.items()}, f)
 
 
-def test_prefix_covers_floor_and_rank0():
-    """One driver round must lift the floor, minus the explicit deferral."""
-    keys = list(R.registry().keys())
-    prefix = set(keys[:PREFIX_BUDGET])
-    floor = min(R._VERDICT_ROUND.values())
-    floor_keys = {k for k, v in R._VERDICT_ROUND.items() if v == floor}
-    rank0 = {k for k in keys if R._rank(k) == (0, 0)}
-    # demand is the UNION: a floor-vintage key that is ALSO stale-marked
-    # occupies one slot, not two (first round with overlap: r22, where
-    # six r17 keys are in the optimization-touched stale cohort)
-    overflow = max(0, len(rank0 | floor_keys) - PREFIX_BUDGET)
-    assert len(R._DEFER_NEXT_ROUND) == overflow, (
-        f"deferral set must absorb the budget overflow exactly: "
-        f"{len(rank0)} rank-0 | {len(floor_keys)} floor keys = "
-        f"{len(rank0 | floor_keys)} demanded vs budget "
-        f"{PREFIX_BUDGET} -> overflow {overflow}, but _DEFER_NEXT_ROUND "
-        f"has {len(R._DEFER_NEXT_ROUND)}"
-    )
-    missing_floor = floor_keys - prefix - R._DEFER_NEXT_ROUND
-    missing_rank0 = rank0 - prefix
-    assert not missing_rank0, (
-        f"rank-(0,0) keys outside the 50-key prefix: {sorted(missing_rank0)}"
-    )
-    assert not missing_floor, (
-        f"r{floor}-vintage keys outside the 50-key prefix: "
-        f"{sorted(missing_floor)} — they will not be re-certified this "
-        "round and the floor cannot rise"
-    )
-    deferred_in_prefix = R._DEFER_NEXT_ROUND & prefix
-    assert not deferred_in_prefix, (
-        f"deferred keys must rank BEHIND the prefix: {deferred_in_prefix}"
-    )
+def test_committed_verdict_files_parse():
+    """Every committed file is a {key: verdict dict} map.
+
+    The derivation skips an unreadable file so that importing the
+    registry never fails; this makes such a file fail here instead."""
+    paths = _committed_files()
+    assert paths, "no CORRECTNESS files found — run from the repo root"
+    for path in paths:
+        with open(path) as f:
+            data = json.load(f)
+        assert isinstance(data, dict) and data, path
+        bad = [k for k, v in data.items() if not isinstance(v, dict)]
+        assert not bad, f"{path}: non-dict verdicts for {bad}"
+
+
+def test_derived_latest_green_matches_files(green_rounds):
+    derived = R._latest_green(R._VERDICT_DIR)
+    assert derived == {k: max(v) for k, v in green_rounds.items()}
+
+
+def test_registry_sorted_by_derived_rank(green_rounds):
+    """Rank = latest green round, 0 for never-green or stale-marked keys;
+    equal ranks keep registration order."""
+    def rank(k: str) -> int:
+        latest = max(green_rounds.get(k, [0]))
+        return 0 if latest <= R._STALE_SINCE.get(k, 0) else latest
+
+    reg = _registration_order()
+    keys = list(R.registry())
+    assert sorted(keys) == sorted(reg)
+    assert keys == sorted(reg, key=rank)
+
+
+def test_no_verdict_files_gives_registration_order(tmp_path, monkeypatch):
+    monkeypatch.setattr(R, "_VERDICT_DIR", str(tmp_path))
+    assert list(R.registry()) == _registration_order()
+
+
+def test_rounds_resolve_numerically(tmp_path, monkeypatch):
+    """r9 < r10 < r100, although "r100" < "r9" as strings."""
+    first, second = _registration_order()[:2]
+    _write_round(tmp_path, 9, {first: True, second: True})
+    _write_round(tmp_path, 10, {first: False, second: True})
+    _write_round(tmp_path, 100, {first: True, second: False})
+    monkeypatch.setattr(R, "_VERDICT_DIR", str(tmp_path))
+    monkeypatch.setattr(R, "_STALE_SINCE", {})
+    assert R._latest_green(str(tmp_path)) == {first: 100, second: 10}
+    keys = list(R.registry())
+    assert keys.index(second) < keys.index(first)
+
+
+def test_stale_mark_expires_with_a_newer_green(tmp_path, monkeypatch):
+    first, second = _registration_order()[:2]
+    monkeypatch.setattr(R, "_STALE_SINCE", {second: 5})
+    old, red, green = (tmp_path / d for d in ("old", "red", "green"))
+    for d in (old, red, green):
+        d.mkdir()
+        _write_round(d, 5, {first: True, second: True})
+    _write_round(red, 6, {first: True, second: False})
+    _write_round(green, 6, {first: True, second: True})
+
+    def order(d) -> list[str]:
+        monkeypatch.setattr(R, "_VERDICT_DIR", str(d))
+        keys = list(R.registry())
+        return [k for k in keys if k in (first, second)]
+
+    assert order(old) == [second, first]  # marked: ranks with never-green
+    assert order(red) == [second, first]  # a red grade keeps the mark
+    assert order(green) == [first, second]  # r6 green: mark expired
 
 
 def test_stale_set_keys_exist():
-    """_STALE_REGRADE must reference registered keys only."""
+    """_STALE_SINCE must reference registered keys only."""
     keys = set(R.registry().keys())
-    unknown = set(R._STALE_REGRADE) - keys
+    unknown = set(R._STALE_SINCE) - keys
     assert not unknown, f"stale-regrade names not in registry: {sorted(unknown)}"
 
 

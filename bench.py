@@ -9,10 +9,17 @@ as the LAST line (tail-capture-safe):
 
 Each query executes fully (noop sink — no driver-side collect) so the
 measured time is scan+shuffle+compute, which is what scales to the cluster.
+
+`python bench.py --keys k1,k2` times exactly those keys as one block,
+through the same prelude, probes, leak guard and median of 3; the
+summary's `metric` names the subset. Every timed key gets a profile in
+the detail line's `profiles`, read from the status store (UI off) after
+its reps, outside the timed region: see `profile`.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
@@ -22,15 +29,17 @@ REPO_ROOT = os.path.dirname(os.path.abspath(__file__))
 if REPO_ROOT not in sys.path:
     sys.path.insert(0, REPO_ROOT)
 
-# Median of `_probe_cpu` on an idle local[32] sandbox (measured round 6).
-# If the hardware profile changes, re-measure and update.
+# Median of `_probe_cpu` on an idle local[32] sandbox. If the hardware
+# profile changes, re-measure and update.
 _CAL_REF_SEC = 0.18
 
-# Median of `_probe_shuffle` (measured round 12). The CPU probe is pure
-# codegen and blind to degraded shuffle/disk service; the ratio pair
-# separates the cases: CPU flat + shuffle high => environment; both flat
-# + one key moved => real regression.
+# Median of `_probe_shuffle`. The CPU probe is pure codegen and blind to
+# degraded shuffle/disk service; the ratio pair separates the cases: CPU
+# flat + shuffle high => environment; both flat + one key moved => real
+# regression.
 _SHUF_REF_SEC = 0.79
+
+MB = 1024 * 1024
 
 
 def _probe_cpu(spark) -> float:
@@ -85,12 +94,12 @@ HEADLINE = [
     "text_stats",
 ]
 
-# Headline-v2 (FROZEN round 8 — VERDICT r7 ask #7): the 14 operators
-# added after the original headline set froze, timed the same way and
-# summed into their OWN tracked total (`extras_total`) so a regression
-# here moves a recorded aggregate, while the 22-query total stays
-# comparable to BASELINE.md. Do not append here — new keys go in
-# FRESH_KEYS below until the next freeze.
+# Frozen extras blocks: operators added after the headline set froze,
+# timed the same way, each summed into its OWN tracked total
+# (`extras_total`, `extras_v3_total`, ...) so a regression there moves a
+# recorded aggregate while the 22-key headline total stays comparable
+# across runs. Do not append to a frozen block: new keys go in FRESH_KEYS
+# until the next freeze.
 EXTRAS = [
     "text_decontaminate",
     "dedup_containment",
@@ -107,57 +116,46 @@ EXTRAS = [
     "win_ewma",
     "dedup_semantic_cluster",
 ]
-# Headline-v3 (FROZEN round 9 — VERDICT r8 ask #4): the round-8
-# additions graduate out of FRESH into their own tracked total
-# (`extras_v3_total`) so r10 regressions here move a recorded
-# aggregate. Do not append — new keys go in FRESH_KEYS until the next
-# freeze.
 EXTRAS_V3 = [
     "stream_observe_metrics",
     "stream_python_datasource",
     "text_bpe_tokenize",
 ]
-# Headline-v4 (FROZEN round 10 — VERDICT r9 ask #4): round 9's one
-# sanctioned key graduates out of FRESH into its own tracked total
-# (`extras_v4_total`). Its number is contract-verification-dominated
-# (the registered query runs the ANN path PLUS the exact all-pairs form
-# to grade recall) — expect it large but stable. Do not append — new
-# keys go in FRESH_KEYS until the next freeze.
+# Contract-verification-dominated: the registered query runs the ANN path
+# PLUS the exact all-pairs form to grade recall — large but stable.
 EXTRAS_V4 = [
     "sim_maxsim_ann",
 ]
-# Headline-v5 (FROZEN round 12): round 10's one sanctioned key
-# graduates out of FRESH into its own tracked total
-# (`extras_v5_total`). Its number is micro-batch-dominated — four real
-# foreachBatch probe+admit cycles per run — expect it large but stable.
-# Do not append — new keys go in FRESH_KEYS until the next freeze.
+# Micro-batch-dominated: four real foreachBatch probe+admit cycles per
+# run — large but stable.
 EXTRAS_V5 = [
     "stream_dedup_incremental",
 ]
-# Headline-v6 (FROZEN round 13): round 12's one sanctioned key
-# graduates out of FRESH into its own tracked total
-# (`extras_v6_total`). Scan-dominated (pyavro seed read back through
-# the Python DataSource) — expect it small and stable. Do not append —
-# new keys go in FRESH_KEYS until the next freeze.
+# Scan-dominated: the pyavro seed read back through the Python DataSource.
 EXTRAS_V6 = [
     "scan_avro",
 ]
-# Rolling pool for keys added THIS round: timed and reported, not yet
-# part of any frozen total (they graduate at the next freeze).
+# Rolling pool for newly added keys: timed and reported, not yet part of
+# any frozen total (they graduate at the next freeze).
 FRESH_KEYS: list[str] = []
 
+# Timed blocks in run order: (probe tag, keys).
+BLOCKS = (
+    ("headline", HEADLINE), ("extra", EXTRAS), ("extra-v3", EXTRAS_V3),
+    ("extra-v4", EXTRAS_V4), ("extra-v5", EXTRAS_V5),
+    ("extra-v6", EXTRAS_V6), ("fresh", FRESH_KEYS),
+)
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    from fintech_data_lake_as_code_spark.registry import all_queries
-    from fintech_data_lake_as_code_spark.session import get_spark
+# Per-query MEDIAN of N_RUNS runs: single-shot timings on this box swing
+# +/-30% with background load; medians are what regressions are graded
+# against. Total = sum of medians.
+N_RUNS = 3
 
-    spark = get_spark("fintech-data-lake-bench")
-    spark.sparkContext.setLogLevel("ERROR")
-    queries = all_queries()
 
-    # Warm the JVM / codegen / file-index paths so the first timed query
-    # isn't charged session startup (we measure queries, not boot).
+def prelude(spark, sf_dir: str, queries) -> None:
+    """Untimed warm-up, so the first timed query isn't charged session
+    start-up and no one-time cost lands inside a timed rep."""
+    # JVM / codegen / file-index paths
     spark.range(1_000_000).selectExpr("sum(id)").collect()
     spark.read.parquet(f"{sf_dir}/lineitem.parquet").limit(1).collect()
     # Pre-spawn the Arrow Python workers (one per core, reused afterwards via
@@ -191,14 +189,11 @@ def main() -> None:
     _bucketed_table(spark, sf_dir, "orders", "o_orderkey")
     # The shared shingle index and its sibling memos are one-time
     # derived artifacts (dedup.py::_SESSION_MEMOS: materialize once, fan
-    # every dedup strategy out from them); warm ALL of them here so no
-    # memo populates lazily inside a timed rep — the leak guard below
-    # snapshots the sanctioned persistent-RDD set ONCE, so a mid-rep
-    # memo would be unpersisted after rep 1 and silently recomputed
-    # every later rep (ADVICE r14; r4's dedup_near_minhash 0.73->1.26 s
-    # swing was the un-warmed variant of the same mistake). The registry
-    # lives next to the memo dicts, so a new memo is warmed here without
-    # this file changing.
+    # every dedup strategy out from them). Warm ALL of them before the
+    # leak guard snapshots the sanctioned persistent-RDD set: a memo that
+    # populated inside a timed rep would be unpersisted after rep 1 and
+    # silently recomputed every later rep. The registry lives next to the
+    # memo dicts, so a new memo is warmed here without this file changing.
     from fintech_data_lake_as_code_spark.operators.dedup import (
         warm_session_memos,
     )
@@ -207,9 +202,9 @@ def main() -> None:
     # Seed the streaming landing zones untimed: a fingerprint-forced
     # reseed (io/dedup derivation change since the last seed) is a
     # one-time landing write that would otherwise land inside the first
-    # timed run of whichever streaming key touches it first — the
-    # r10 extras_v3 contamination suspect. Marker-guarded, so when the
-    # seeds are current these cost one marker read each.
+    # timed run of whichever streaming key touches it first.
+    # Marker-guarded, so when the seeds are current these cost one marker
+    # read each.
     from fintech_data_lake_as_code_spark.streaming.queries import (
         _docs_json_dir,
         _events_json_dir,
@@ -225,21 +220,152 @@ def main() -> None:
         "noop"
     ).save()
 
-    # Noise calibration, timed before the headline loop: round-over-round
-    # the probe's ratio to _CAL_REF_SEC separates sandbox load (uniform
-    # inflation of everything, calibration included) from real
-    # regressions (one query moves, calibration doesn't).
-    # `calibration_ratio` ~1.0 means comparable conditions, and
-    # `queries_normalized` rescales each median by the ratio.
+
+class LeakGuard:
+    """A timed median must never ride CacheManager reuse of blocks a
+    previous rep leaked. Everything persisted when the guard is made (the
+    prelude's shared memos, bucketed-layout machinery) is SANCTIONED
+    session-lifetime reuse; any persistent RDD a timed rep leaves behind
+    beyond that set is dropped before the next rep starts and the key is
+    named in the summary's `cache_leaks`."""
+
+    def __init__(self, spark) -> None:
+        self.spark = spark
+        jmap = spark.sparkContext._jsc.getPersistentRDDs()
+        self.sanctioned = {int(k) for k in jmap.keySet().toArray()}
+        self.cache_leaks: dict[str, int] = {}
+        self.resident_checkpoints: dict[str, int] = {}
+
+    def __call__(self, key: str) -> None:
+        jmap = self.spark.sparkContext._jsc.getPersistentRDDs()
+        for k in jmap.keySet().toArray():
+            if int(k) in self.sanctioned:
+                continue
+            jrdd = jmap.get(k)
+            # localCheckpoint blocks backing a RETURNED result (the CC/
+            # PageRank loops' final round) are the result's own storage,
+            # not a cache leak — dropped all the same (bounded storage,
+            # and the next rep must not find them) but reported apart so
+            # cache_leaks stays the pure alarm signal
+            bucket = (
+                self.resident_checkpoints
+                if jrdd.rdd().isLocallyCheckpointed()
+                else self.cache_leaks
+            )
+            jrdd.unpersist(False)
+            bucket[key] = bucket.get(key, 0) + 1
+
+
+def time_key(spark, sf_dir: str, key: str, fn, guard, reader):
+    """N_RUNS timed noop-sink runs of one key -> (run seconds, profile).
+    `reader` is a perfbench.tracing.StatusReader positioned at this key's
+    first job; it is read once, after the reps."""
+    runs, builds, windows = [], [], []
+    for _ in range(N_RUNS):
+        t0 = time.perf_counter()
+        df = fn(spark, sf_dir)
+        t1 = time.perf_counter()
+        df.write.mode("overwrite").format("noop").save()
+        t2 = time.perf_counter()
+        runs.append(t2 - t0)
+        builds.append(t1 - t0)
+        windows.append((t0, t1, t2))
+        guard(key)
+    return runs, profile(reader.new_work(), runs, builds, windows)
+
+
+def profile(work: dict, runs, builds, windows) -> dict:
+    """Where one key's time went, from the status store's record of its
+    reps (`StatusReader.new_work()`). Counters are per-rep means; `build_s`
+    is the median time of `fn(spark, sf_dir)` (eager jobs such as fits and
+    memo reads run there); `residue_s` is the write's wall time minus the
+    union of its stage spans: planning, scheduling, AQE re-plans and
+    driver round-trips. `top_stages` are the median rep's three heaviest
+    stages by executor run time."""
+    from perfbench.tracing import union_seconds
+
+    n = len(runs)
+    ran = [s for s in work["stages"] if not s["skipped"]]
+    spans = [(s["start"], s["end"]) for s in ran if s["start"] and s["end"]]
+    to_epoch = time.time() - time.perf_counter()
+    residue = sum(
+        t2 - t1 - union_seconds(spans, t1 + to_epoch, t2 + to_epoch)
+        for _, t1, t2 in windows
+    )
+    t0, _, t2 = windows[sorted(range(n), key=runs.__getitem__)[n // 2]]
+    median_rep = [  # stage submission times are whole milliseconds
+        s for s in ran
+        if s["start"] and t0 + to_epoch - 0.001 <= s["start"] <= t2 + to_epoch
+    ]
+
+    def mean(total: float, digits: int = 3) -> float:
+        return round(total / n, digits)
+
+    def stage_sum(field: str, scale: float = 1.0) -> float:
+        return sum(s[field] for s in ran) / scale
+
+    return {
+        "build_s": round(sorted(builds)[n // 2], 3),
+        "jobs": mean(len(work["jobs"]), 1),
+        "stages": mean(len(ran), 1),
+        "stages_skipped": mean(len(work["stages"]) - len(ran), 1),
+        "tasks": mean(stage_sum("tasks"), 1),
+        "task_run_s": mean(stage_sum("run_s")),
+        "task_cpu_s": mean(stage_sum("cpu_s")),
+        "shuffle_read_mb": mean(stage_sum("shuffle_read", MB)),
+        "shuffle_write_mb": mean(stage_sum("shuffle_write", MB)),
+        "spill_mb": mean(stage_sum("spill", MB)),
+        "residue_s": mean(max(0.0, residue)),
+        "top_stages": [
+            {"stage": s["id"], "tasks": s["tasks"],
+             "run_s": round(s["run_s"], 3), "cpu_s": round(s["cpu_s"], 3),
+             "shuffle_read_mb": round(s["shuffle_read"] / MB, 3),
+             "shuffle_write_mb": round(s["shuffle_write"] / MB, 3)}
+            for s in sorted(median_rep, key=lambda s: -s["run_s"])[:3]
+        ],
+    }
+
+
+def _parse_keys(argv) -> list[str]:
+    """`--keys k1,k2` -> the keys, checked against the registry before any
+    session starts; no flag -> [] (the full frozen-block run)."""
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("--keys", default="", help="time only these keys")
+    keys = [k for k in ap.parse_args(argv).keys.split(",") if k]
+    if keys:
+        from fintech_data_lake_as_code_spark.registry import all_queries
+
+        unknown = [k for k in keys if k not in all_queries()]
+        if unknown:
+            ap.error(f"unknown keys: {','.join(unknown)}")
+    return keys
+
+
+def main(argv=None) -> None:
+    keys = _parse_keys(argv)
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    from fintech_data_lake_as_code_spark.registry import all_queries
+    from fintech_data_lake_as_code_spark.session import get_spark
+    from perfbench.tracing import StatusReader
+
+    spark = get_spark("fintech-data-lake-bench")
+    spark.sparkContext.setLogLevel("ERROR")
+    queries = all_queries()
+    prelude(spark, sf_dir, queries)
+
+    # Noise calibration, timed before the timed blocks: the probe's ratio
+    # to _CAL_REF_SEC separates sandbox load (uniform inflation of
+    # everything, calibration included) from real regressions (one query
+    # moves, calibration doesn't). `calibration_ratio` ~1.0 means
+    # comparable conditions, and `queries_normalized` rescales each median
+    # by the ratio.
     cal_sec = _probe_median(_probe_cpu, spark, 5)
     cal_ratio = round(cal_sec / _CAL_REF_SEC, 3)
-    # Degraded-box retry (VERDICT r13 #5): two consecutive rounds were
-    # recorded on shuffle-degraded boxes (pre-ratios 1.26, 1.39) and
-    # every cross-round per-key comparison needed manual normalization.
-    # When the pre-run shuffle probe exceeds the threshold, wait and
-    # re-probe (transient co-tenant load often drains); the run proceeds
-    # on the LAST probe either way, with the full attempt trail recorded
-    # so a still-degraded run is self-describing in the artifact.
+    # Degraded-box retry: when the pre-run shuffle probe exceeds the
+    # threshold, wait and re-probe (transient co-tenant load often
+    # drains); the run proceeds on the LAST probe either way, with the
+    # full attempt trail recorded so a still-degraded run is
+    # self-describing in the artifact.
     SHUF_DEGRADED = 1.15
     shuf_sec = _probe_median(_probe_shuffle, spark, 5)
     shuf_ratio = round(shuf_sec / _SHUF_REF_SEC, 3)
@@ -262,84 +388,31 @@ def main() -> None:
         file=sys.stderr,
     )
 
-    # Cache-leak guard (VERDICT r13 #2): a timed median must never ride
-    # CacheManager reuse of blocks a previous rep leaked — that is
-    # exactly how r11 recorded 1.72 s for graph_triangle_count whose
-    # honest cold cost is ~3.4 s, burning two rounds of adjudication.
-    # Everything persisted by the untimed prelude above (the shared
-    # shingle artifacts, bucketed-layout machinery) is SANCTIONED
-    # session-lifetime reuse; any persistent RDD a timed rep leaves
-    # behind beyond that set is dropped before the next rep starts and
-    # the key is named in the summary's `cache_leaks`.
-    def _persistent_ids() -> set[int]:
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        return {int(k) for k in jmap.keySet().toArray()}
-
-    sanctioned = _persistent_ids()
-    cache_leaks: dict[str, int] = {}
-    resident_checkpoints: dict[str, int] = {}
-
-    def _leak_guard(key: str) -> None:
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        for k in jmap.keySet().toArray():
-            if int(k) in sanctioned:
-                continue
-            jrdd = jmap.get(k)
-            # localCheckpoint blocks backing a RETURNED result (the CC/
-            # PageRank loops' final round) are the result's own storage,
-            # not a cache leak — dropped all the same (bounded storage,
-            # and the next rep must not find them) but reported apart so
-            # cache_leaks stays the pure alarm signal
-            bucket = (
-                resident_checkpoints
-                if jrdd.rdd().isLocallyCheckpointed()
-                else cache_leaks
-            )
-            jrdd.unpersist(False)
-            bucket[key] = bucket.get(key, 0) + 1
-
-    # Per-query MEDIAN of N_RUNS runs: single-shot timings on this box swing
-    # +/-30% with background load; medians are what regressions are graded
-    # against. Total = sum of medians.
-    N_RUNS = 3
-
-    # One cheap shuffle probe per block (VERDICT r14 #6): the late
-    # blocks are where mid-run service degradation lands (the r14
-    # v5/v4 numbers were exactly this), and a run-wide pre/post pair
-    # can't localize WHICH block ran degraded. Median of 3 quick reps,
-    # not the run-wide median-of-5 — it contextualizes the block while
-    # the run-wide pair stays the signal. (r15/r16 ran this single-shot
-    # and the `extra` block read ~1.9 on two otherwise-clean days while
-    # idle single shots spread 0.89–1.2 s — a one-GC-pause artifact the
-    # median suppresses; ~2 s extra untimed cost per block.)
+    guard = LeakGuard(spark)
+    reader = StatusReader(spark)
+    # One cheap probe pair per block: the late blocks are where mid-run
+    # CPU squeezes and shuffle-service degradation land, and a run-wide
+    # pre/post pair can't localize WHICH block ran degraded. Median of 3
+    # quick reps (a single shot reads one GC pause as degradation), not
+    # the run-wide median-of-5 — it contextualizes the block while the
+    # run-wide pair stays the signal.
     block_shuffle: dict[str, float] = {}
-    # Per-block CPU ratios (round 18): adjudication rules key off blocks
-    # "clean on BOTH probe axes" (the triangle reopen rule), but until
-    # now only SHUFFLE was probed per-block — CPU had just the run-wide
-    # pre/post pair, so a mid-run CPU squeeze (r18 run 3: pre 0.683,
-    # post 1.294) could not be pinned to the block it actually hit.
-    # Same median-of-3 discipline; ~0.5 s untimed cost per block.
     block_cpu: dict[str, float] = {}
+    profiles: dict[str, dict] = {}
 
-    def _time_block(keys: list[str], tag: str) -> dict[str, float]:
+    def _time_block(block: list[str], tag: str) -> dict[str, float]:
         out: dict[str, float] = {}
-        if keys:
+        if block:
             shuf = _probe_median(_probe_shuffle, spark, 3)
             block_shuffle[tag] = round(shuf / _SHUF_REF_SEC, 3)
             cpu = _probe_median(_probe_cpu, spark, 3)
             block_cpu[tag] = round(cpu / _CAL_REF_SEC, 3)
-        for key in keys:
+            reader.new_work()  # the probes' jobs are no key's
+        for key in block:
             fn = queries.get(key)
             if fn is None:
                 continue
-            runs = []
-            for _ in range(N_RUNS):
-                t0 = time.perf_counter()
-                fn(spark, sf_dir).write.mode("overwrite").format(
-                    "noop"
-                ).save()
-                runs.append(time.perf_counter() - t0)
-                _leak_guard(key)
+            runs, profiles[key] = time_key(spark, sf_dir, key, fn, guard, reader)
             out[key] = round(sorted(runs)[len(runs) // 2], 3)
             print(
                 f"# {tag} {key}: median {out[key]:.3f}s of "
@@ -348,32 +421,19 @@ def main() -> None:
             )
         return out
 
-    # The headline block rides the SAME per-block probe path as the
-    # extras (ADVICE r18): until r19 the headline keys were timed by a
-    # separate loop that block_shuffle_ratios/block_cpu_ratios never
-    # covered, so BASELINE.md's per-block adjudication of headline
-    # readings had to be inferred from the run-wide pre-cal alone.
-    timings = _time_block(HEADLINE, "headline")
-    total = round(sum(timings.values()), 3)
-
-    extras = _time_block(EXTRAS, "extra")
-    extras_total = round(sum(extras.values()), 3)
-    extras_v3 = _time_block(EXTRAS_V3, "extra-v3")
-    extras_v3_total = round(sum(extras_v3.values()), 3)
-    extras_v4 = _time_block(EXTRAS_V4, "extra-v4")
-    extras_v4_total = round(sum(extras_v4.values()), 3)
-    extras_v5 = _time_block(EXTRAS_V5, "extra-v5")
-    extras_v5_total = round(sum(extras_v5.values()), 3)
-    extras_v6 = _time_block(EXTRAS_V6, "extra-v6")
-    extras_v6_total = round(sum(extras_v6.values()), 3)
-    fresh = _time_block(FRESH_KEYS, "fresh")
+    # A --keys subset runs as the one block, under its own tag; the
+    # frozen blocks then read empty.
+    timed = {tag: {} for tag, _ in BLOCKS}
+    for tag, block in (("keys", keys),) if keys else BLOCKS:
+        timed[tag] = _time_block(block, tag)
+    tot = {tag: round(sum(vals.values()), 3) for tag, vals in timed.items()}
+    timings = timed["keys" if keys else "headline"]
 
     # Re-probe AFTER the timed loops: background load arriving mid-run
     # inflates late queries while the start-of-run probe shows an idle
-    # box (observed in round 8: last headline keys +2x while early keys
-    # were flat). A post-ratio far above the pre-ratio marks the run as
-    # load-contaminated; normalization stays on the PRE ratio for
-    # cross-round comparability.
+    # box. A post-ratio far above the pre-ratio marks the run as
+    # load-contaminated; normalization stays on the PRE ratio so runs
+    # stay comparable.
     cal_post_sec = _probe_median(_probe_cpu, spark, 5)
     cal_post_ratio = round(cal_post_sec / _CAL_REF_SEC, 3)
     shuf_post_sec = _probe_median(_probe_shuffle, spark, 5)
@@ -410,60 +470,49 @@ def main() -> None:
             "queries_normalized": {
                 k: round(v / cal_ratio, 3) for k, v in timings.items()
             },
-            "extras": extras,
-            "extras_total_normalized": round(extras_total / cal_ratio, 3),
-            "extras_v3": extras_v3,
-            "extras_v4": extras_v4,
-            "extras_v5": extras_v5,
-            "extras_v6": extras_v6,
-            "fresh": fresh,
-            # per-key normalized extras (VERDICT r13 #5): cross-round
-            # per-key comparison on a loaded box previously required
-            # hand-dividing each raw value; same CPU-ratio normalization
-            # as queries_normalized (shuffle-degradation remains visible
+            "extras": timed["extra"],
+            "extras_total_normalized": round(tot["extra"] / cal_ratio, 3),
+            "extras_v3": timed["extra-v3"],
+            "extras_v4": timed["extra-v4"],
+            "extras_v5": timed["extra-v5"],
+            "extras_v6": timed["extra-v6"],
+            "fresh": timed["fresh"],
+            # per-key normalized extras: the same CPU-ratio normalization
+            # as queries_normalized (shuffle degradation stays visible
             # via the shuffle ratios — normalize by those judiciously,
             # they are I/O-specific)
             "extras_normalized": {
                 blk: {k: round(v / cal_ratio, 3) for k, v in vals.items()}
                 for blk, vals in (
-                    ("v2", extras),
-                    ("v3", extras_v3),
-                    ("v4", extras_v4),
-                    ("v5", extras_v5),
-                    ("v6", extras_v6),
-                    ("fresh", fresh),
+                    ("v2", timed["extra"]),
+                    ("v3", timed["extra-v3"]),
+                    ("v4", timed["extra-v4"]),
+                    ("v5", timed["extra-v5"]),
+                    ("v6", timed["extra-v6"]),
+                    ("fresh", timed["fresh"]),
                 )
             },
             "shuffle_probe_attempts": shuffle_attempts,
             "block_shuffle_ratios": block_shuffle,
             "block_cpu_ratios": block_cpu,
-            "cache_leaks": cache_leaks,
-            "resident_checkpoints_dropped": resident_checkpoints,
+            "cache_leaks": guard.cache_leaks,
+            "resident_checkpoints_dropped": guard.resident_checkpoints,
+            "profiles": profiles,
         }
     }
     summary = build_summary(
-        sf,
-        timings,
-        total,
-        cal_ratio,
-        extras_total,
-        extras_v3_total,
-        extras_v4_total,
-        extras_v5_total,
-        fresh,
-        cal_post_ratio,
-        shuf_ratio,
-        shuf_post_ratio,
-        extras_v6_total,
-        cache_leaks=cache_leaks,
+        sf, timings, round(sum(timings.values()), 3), cal_ratio, tot["extra"],
+        tot["extra-v3"], tot["extra-v4"], tot["extra-v5"], timed["fresh"],
+        cal_post_ratio, shuf_ratio, shuf_post_ratio, tot["extra-v6"],
+        cache_leaks=guard.cache_leaks,
         shuffle_probe_retries=len(shuffle_attempts) - 1,
+        metric=f"keys_wall_clock:{','.join(keys)}" if keys else None,
     )
     # The driver keeps only the TAIL of stdout, so a single giant JSON
-    # line loses its head — exactly what nulled BENCH_r08's "value"
-    # (VERDICT r8 #3). Emit the bulky per-key detail FIRST (its loss is
-    # tolerable), then the compact driver-contract summary as the LAST,
-    # short line: a tail capture always keeps line ends, so the summary
-    # survives intact and stays parseable.
+    # line would lose its head. Emit the bulky per-key detail FIRST (its
+    # loss is tolerable), then the compact driver-contract summary as the
+    # LAST, short line: a tail capture always keeps line ends, so the
+    # summary survives intact and stays parseable.
     print(json.dumps(detail))
     print(json.dumps(summary))
     spark.stop()
@@ -491,22 +540,24 @@ def build_summary(
     extras_v6_total: float | None = None,
     cache_leaks: dict[str, int] | None = None,
     shuffle_probe_retries: int | None = None,
+    metric: str | None = None,
 ) -> dict:
-    """The compact driver-contract result: everything the per-round
-    BENCH artifact must retain, and nothing bulky. Must stay within
+    """The compact driver-contract result: everything the BENCH
+    artifact must retain, and nothing bulky. Must stay within
     SUMMARY_LINE_BUDGET when JSON-encoded (test-pinned) so the driver's
-    tail capture can never truncate the headline value again.
+    tail capture can never truncate the headline value.
 
     `calibration_post_ratio` is the end-of-run load probe: when it sits
     far above `calibration_ratio`, background load arrived mid-run and
     the LATE blocks (extras_v3/v4, fresh) are inflated while the early
-    headline stays flat — the exact r10 signature. It must live in the
-    summary, not the detail line, because the detail's head is what the
-    driver's tail capture truncates (r10's post-ratio was lost that
-    way, which is why the r10 extras regression took a round to
-    adjudicate)."""
+    headline stays flat. It must live in the summary, not the detail
+    line, because the detail's head is what the driver's tail capture
+    truncates.
+
+    `metric` names a `--keys` subset run, so its total is never read as
+    the headline total."""
     out = {
-        "metric": "headline_queries_wall_clock",
+        "metric": metric or "headline_queries_wall_clock",
         "value": round(total, 3),
         "unit": "sec",
         "queries": timings,
@@ -525,20 +576,20 @@ def build_summary(
         out["calibration_post_ratio"] = cal_post_ratio
     # shuffle-service ratios (pre/post): the CPU ratios above are blind
     # to degraded shuffle/disk I/O — these ride the tail-safe summary so
-    # a "uniform shuffle-key inflation, flat CPU probe" round is
+    # a "uniform shuffle-key inflation, flat CPU probe" run is
     # adjudicable from the artifact alone (environment, not regression)
     if shuffle_ratio is not None:
         out["calibration_shuffle_ratio"] = shuffle_ratio
     if shuffle_post_ratio is not None:
         out["calibration_shuffle_post_ratio"] = shuffle_post_ratio
-    # cache_leaks (VERDICT r13 #2): keys whose timed reps left persistent
+    # cache_leaks: keys whose timed reps left persistent
     # RDDs behind (count of dropped RDDs per key) — nonempty means those
     # medians were guarded against CacheManager reuse but the operator
     # has a release bug to fix. MUST be {} on a healthy run.
     if cache_leaks is not None:
         out["cache_leaks"] = cache_leaks
     # >0 means the pre-run shuffle probe was degraded and the run waited
-    # and re-probed (VERDICT r13 #5); the final ratio above is what the
+    # and re-probed; the final ratio above is what the
     # run proceeded on.
     if shuffle_probe_retries:
         out["shuffle_probe_retries"] = shuffle_probe_retries

@@ -4,8 +4,8 @@ io.width_preserving_spread) call sites in ONE session: "old" patches the
 helper to identity in every loaded engine module that holds it, "new"
 leaves it active. The arms alternate which runs first in each pair; the
 A/B refuses to time when the two arms' normalized plans are identical
-(the patch did not reach the key's spread). Noop-sink timed, CPU probe
-before and after.
+(the patch did not reach the key's spread). Noop-sink timed, bench.py's
+CPU probe before and after, reported as its ratio to bench's reference.
 
 Usage: python scripts/ab_spread_toggle.py --key profile_columns [--pairs 5]
 """
@@ -19,6 +19,8 @@ import time
 REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if REPO_ROOT not in sys.path:
     sys.path.insert(0, REPO_ROOT)
+
+from bench import _CAL_REF_SEC, _probe_cpu, _probe_median  # noqa: E402
 
 
 def main() -> int:
@@ -46,17 +48,6 @@ def main() -> int:
     fn = all_queries()[args.key]
 
     real_spread = getattr(io_mod, args.which)
-
-    def probe():
-        t = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            spark.range(200_000_000).selectExpr(
-                "sum(id + 1) as a", "sum(id * 2) as b"
-            ).collect()
-            t.append(time.perf_counter() - t0)
-        t.sort()
-        return t[1]
 
     # every engine module that imported the helper by name needs the
     # patch applied to ITS namespace too (operators, functions, streaming)
@@ -98,7 +89,7 @@ def main() -> int:
             set_spread(True)
 
     run("old"); run("new")  # warm-up
-    pre = probe()
+    pre = _probe_median(_probe_cpu, spark, 3)
     pairs = []
     for i in range(args.pairs):
         if i % 2:
@@ -110,14 +101,15 @@ def main() -> int:
         pairs.append((a, b))
         print(f"pair {i}: old {a:.3f}  new {b:.3f}  ratio {b/a:.2f}",
               flush=True)
-    post = probe()
+    post = _probe_median(_probe_cpu, spark, 3)
     olds = sorted(p[0] for p in pairs)
     news = sorted(p[1] for p in pairs)
     rats = sorted(p[1] / p[0] for p in pairs)
     print(f"medians: old {olds[len(olds)//2]:.3f} "
           f"new {news[len(news)//2]:.3f}  "
           f"median-of-ratios {rats[len(rats)//2]:.2f}  "
-          f"probe pre {pre:.3f} post {post:.3f} (ref 0.18)")
+          f"cpu probe pre {pre:.3f}s ratio={pre / _CAL_REF_SEC:.2f} "
+          f"post {post:.3f}s ratio={post / _CAL_REF_SEC:.2f}")
     return 0
 
 

@@ -1,14 +1,16 @@
 #!/usr/bin/env python3
 """Capture `.explain("formatted")` for registered query keys into
-plans/<tag>/<key>_<suffix>.txt — the optimization-round evidence trail
-(OPTIMIZATION_r21.md): the judge cannot run Spark, so every plan claim
-("2 Exchange -> 1", "SortMergeJoin -> BroadcastHashJoin") is checked
-against these files.
+<out>/<key>_<suffix>.txt — the evidence trail for plan claims ("2
+Exchange -> 1", "SortMergeJoin -> BroadcastHashJoin"), which a reader
+without Spark checks against these files.
 
 Usage:
-    python scripts/capture_plans.py [--keys k1,k2,...] --suffix before
-                                    [--sf /root/testdata/sf0.1]
-                                    [--out plans/r21] [--normalize]
+    python scripts/capture_plans.py --out DIR [--keys k1,k2,...]
+                                    [--suffix before]
+                                    [--sf SF_DIR] [--normalize]
+
+`--out` is required: the committed plans/ directories are records, and a
+capture must never overwrite one by default.
 
 `--keys` defaults to every registered key. `--normalize` rewrites the
 parts of a plan that change from run to run (expression ids `#123`,
@@ -67,7 +69,7 @@ def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--keys", default="", help="default: every key")
     ap.add_argument("--sf", default="/root/testdata/sf0.1")
-    ap.add_argument("--out", default="plans/r21")
+    ap.add_argument("--out", required=True, help="directory, under the repo root if relative")
     ap.add_argument("--suffix", default="before")
     ap.add_argument("--normalize", action="store_true")
     args = ap.parse_args()

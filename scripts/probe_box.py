@@ -13,11 +13,11 @@ recorded calibration pair. The session IS bench's session
 (SPARK_GRAFT_CPUS / SPARK_GRAFT_MASTER / SPARK_GRAFT_DRIVER_MEM),
 same `apply_engine_conf` (AQE, shuffle partitions), so a CLEAN
 verdict here predicts bench's own probe ratios on this box instead
-of a hardcoded local[32] stand-in (ADVICE r18).
+of a hardcoded local[32] stand-in.
 
 Exit 0 when both ratios are at or under their clean thresholds
-(CPU <= 0.75 is the BASELINE.md headline-band condition; shuffle
-<= 1.15 is bench.py's SHUF_DEGRADED retry threshold), exit 1
+(CPU <= 0.75 is the condition under which headline totals were
+recorded; shuffle <= 1.15 is bench.py's SHUF_DEGRADED retry threshold), exit 1
 otherwise — so shell loops can wait for a clean window:
 
     until python scripts/probe_box.py; do sleep 120; done && python bench.py
@@ -40,7 +40,7 @@ from bench import (  # noqa: E402
     _probe_shuffle,
 )
 
-CPU_CLEAN = 0.75  # BASELINE.md: the 14.4-16.0 s headline band condition
+CPU_CLEAN = 0.75  # the 14.4-16.0 s headline band was recorded under it
 SHUF_CLEAN = 1.15  # bench.py SHUF_DEGRADED: retry threshold
 
 

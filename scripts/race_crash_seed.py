@@ -1,10 +1,9 @@
 #!/usr/bin/env python3
 """Crash-recovery net over the marker-guarded seed families.
 
-The r19 live two-session race proved this class needs LIVE nets, not
-code audits (it found the embedded-Derby single-JVM latent three audit
-rounds had missed). This script runs the next untested scenario
-(VERDICT r19 "Next round" #3): a session killed with SIGKILL **mid
+Seed races need LIVE nets, not code audits: a live two-session race
+found an embedded-Derby single-JVM latent that audits had missed. This
+script covers a session killed with SIGKILL **mid
 cold-seed** — landing lock held, marker unwritten, data files possibly
 half-landed — followed by a fresh peer that must recover through the
 committed()/marker paths alone.

@@ -33,10 +33,10 @@ if REPO_ROOT not in sys.path:
 # profile changes, re-measure and update.
 _CAL_REF_SEC = 0.18
 
-# Median of `_probe_shuffle`. The CPU probe is pure codegen and blind to
-# degraded shuffle/disk service; the ratio pair separates the cases: CPU
-# flat + shuffle high => environment; both flat + one key moved => real
-# regression.
+# Median of `_probe_shuffle` on the same sandbox. The CPU probe is pure
+# codegen and blind to degraded shuffle/disk service; the ratio pair
+# separates the cases: CPU flat + shuffle high => environment; both flat
+# + one key moved => real regression.
 _SHUF_REF_SEC = 0.79
 
 MB = 1024 * 1024
@@ -361,30 +361,12 @@ def main(argv=None) -> None:
     # by the ratio.
     cal_sec = _probe_median(_probe_cpu, spark, 5)
     cal_ratio = round(cal_sec / _CAL_REF_SEC, 3)
-    # Degraded-box retry: when the pre-run shuffle probe exceeds the
-    # threshold, wait and re-probe (transient co-tenant load often
-    # drains); the run proceeds on the LAST probe either way, with the
-    # full attempt trail recorded so a still-degraded run is
-    # self-describing in the artifact.
-    SHUF_DEGRADED = 1.15
     shuf_sec = _probe_median(_probe_shuffle, spark, 5)
     shuf_ratio = round(shuf_sec / _SHUF_REF_SEC, 3)
-    shuffle_attempts = [shuf_ratio]
-    while shuf_ratio > SHUF_DEGRADED and len(shuffle_attempts) < 4:
-        print(
-            f"# shuffle probe degraded (ratio {shuf_ratio:.2f} > "
-            f"{SHUF_DEGRADED}); waiting 20s and re-probing",
-            file=sys.stderr,
-        )
-        time.sleep(20)
-        shuf_sec = _probe_median(_probe_shuffle, spark, 5)
-        shuf_ratio = round(shuf_sec / _SHUF_REF_SEC, 3)
-        shuffle_attempts.append(shuf_ratio)
     print(
         f"# calibration: median {cal_sec:.3f}s (ref {_CAL_REF_SEC}s, "
         f"ratio {cal_ratio:.2f}); shuffle {shuf_sec:.3f}s "
-        f"(ref {_SHUF_REF_SEC}s, ratio {shuf_ratio:.2f}, "
-        f"attempts {shuffle_attempts})",
+        f"(ref {_SHUF_REF_SEC}s, ratio {shuf_ratio:.2f})",
         file=sys.stderr,
     )
 
@@ -453,6 +435,8 @@ def main(argv=None) -> None:
     detail = {
         "detail": {
             "calibration": {
+                # the ratios read against the core count they ran on
+                "cores": spark.sparkContext.defaultParallelism,
                 "probe": "range(2e8) two-sum codegen, median of 5",
                 "sec": cal_sec,
                 "ref_sec": _CAL_REF_SEC,
@@ -492,7 +476,6 @@ def main(argv=None) -> None:
                     ("fresh", timed["fresh"]),
                 )
             },
-            "shuffle_probe_attempts": shuffle_attempts,
             "block_shuffle_ratios": block_shuffle,
             "block_cpu_ratios": block_cpu,
             "cache_leaks": guard.cache_leaks,
@@ -505,7 +488,6 @@ def main(argv=None) -> None:
         tot["extra-v3"], tot["extra-v4"], tot["extra-v5"], timed["fresh"],
         cal_post_ratio, shuf_ratio, shuf_post_ratio, tot["extra-v6"],
         cache_leaks=guard.cache_leaks,
-        shuffle_probe_retries=len(shuffle_attempts) - 1,
         metric=f"keys_wall_clock:{','.join(keys)}" if keys else None,
     )
     # The driver keeps only the TAIL of stdout, so a single giant JSON
@@ -539,7 +521,6 @@ def build_summary(
     shuffle_post_ratio: float | None = None,
     extras_v6_total: float | None = None,
     cache_leaks: dict[str, int] | None = None,
-    shuffle_probe_retries: int | None = None,
     metric: str | None = None,
 ) -> dict:
     """The compact driver-contract result: everything the BENCH
@@ -588,11 +569,6 @@ def build_summary(
     # has a release bug to fix. MUST be {} on a healthy run.
     if cache_leaks is not None:
         out["cache_leaks"] = cache_leaks
-    # >0 means the pre-run shuffle probe was degraded and the run waited
-    # and re-probed; the final ratio above is what the
-    # run proceeded on.
-    if shuffle_probe_retries:
-        out["shuffle_probe_retries"] = shuffle_probe_retries
     return out
 
 

@@ -150,9 +150,9 @@ def sf_tag(sf_dir: str) -> str:
     """Collision-safe scratch tag for a dataset root: its basename (human-
     readable) plus a short hash of the ABSOLUTE path. Basename alone
     collided two datasets whose paths share a final component (e.g.
-    /a/sf0.1 and /b/sf0.1), and every marker-guarded reuse — bucketed
-    _LAYOUTs, seeded landings, the Derby seed — would then serve one
-    dataset's files to the other."""
+    /a/sf0.1 and /b/sf0.1), and every marker-guarded reuse (the
+    `seeded_landing` artifacts) would then serve one dataset's files to
+    the other."""
     import hashlib
 
     norm = os.path.normpath(os.path.abspath(sf_dir))
@@ -234,9 +234,8 @@ def write_marker(path: str, text: str) -> None:
     it, common filesystems may replay the rename before the data blocks
     land and surface an empty renamed file (the failure direction would
     still be the safe forced rebuild, but the contract says COMPLETE).
-    One copy, shared by every local marker guard (seeded_landing, the
-    bucketed _LAYOUT, the Derby seed); the lake-scheme analog is
-    streaming.queries._fs_write_text."""
+    `seeded_landing` writes every local `_SEED` marker through it; the
+    lake-scheme analog is streaming.queries._fs_write_text."""
     import time
     import uuid
 
@@ -295,33 +294,36 @@ def source_fingerprint(*paths: str) -> str:
     return h.hexdigest()[:16]
 
 
-def module_fingerprint(module) -> str | None:
-    """sha256 of a module's source file, or None when it can't be read
-    (bytecode-only install, zipimport). Seed/landing markers record this
-    so a derivation-code change invalidates the seeded artifact instead
-    of serving stale rows; None means "unverifiable — always reseed"."""
+def module_fingerprint(*modules) -> str | None:
+    """sha256 of each module's source file, joined with ':' in argument
+    order, or None when any of them can't be read (bytecode-only
+    install, zipimport). Seed/landing markers record this so a
+    derivation-code change invalidates the seeded artifact instead of
+    serving stale rows; None means "unverifiable — always reseed"."""
     import hashlib
 
-    try:
-        with open(module.__file__, "rb") as fh:
-            return hashlib.sha256(fh.read()).hexdigest()
-    except (OSError, TypeError, AttributeError):
-        return None
+    digests = []
+    for module in modules:
+        try:
+            with open(module.__file__, "rb") as fh:
+                digests.append(hashlib.sha256(fh.read()).hexdigest())
+        except (OSError, TypeError, AttributeError):
+            return None
+    return ":".join(digests)
 
 
 def landing_lock(out: str):
     """Same-host advisory writer lock for a shared landing/layout dir.
 
-    The `_SEED`/`_LAYOUT` marker discipline makes REUSE safe, but the
-    initial seeding had a window (the r18 latent sweep's finding in the
-    concurrent-sessions class): two sessions that both observe a
-    missing/mismatched marker both run a mode-overwrite Spark job into
-    the SAME directory — the jobs share the `_temporary` commit dir and
-    one job's cleanup can eat the other's task output, after which a
-    `_SUCCESS` + matching marker can sit over mixed-job debris that
-    every later session trusts. An exclusive flock serializes writers;
-    blocked peers re-check the marker on wake and skip the redundant
-    reseed (double-checked locking).
+    The `_SEED` marker makes REUSE safe, but the initial seeding has a
+    window: two sessions that both observe a missing/mismatched marker
+    both run a mode-overwrite Spark job into the SAME directory — the
+    jobs share the `_temporary` commit dir and one job's cleanup can eat
+    the other's task output, after which a `_SUCCESS` + matching marker
+    can sit over mixed-job debris that every later session trusts. An
+    exclusive flock serializes writers; blocked peers re-check the
+    marker on wake and skip the redundant reseed (double-checked
+    locking). Called only by `seeded_landing`.
 
     The lock file is a SIBLING (`<out>.lock`), never inside `out`: the
     overwrite job clears `out` itself, and re-creating the lock file
@@ -349,9 +351,9 @@ def landing_lock(out: str):
 def seeded_landing(
     out: str, fingerprint: str | None, write, committed=None
 ) -> str:
-    """Marker-guarded write-once landing zone (the `_bucketed_table`
-    `_LAYOUT` discipline for seeded scratch data): the existing contents
-    of `out` are trusted only when BOTH the prior write COMPLETED
+    """The one guard for write-once scratch artifacts (landings, the
+    bucketed layouts, the BMP directory, the Derby seed): the existing
+    contents of `out` are trusted only when BOTH the prior write COMPLETED
     (`committed()` — default: the parquet/json job-commit `_SUCCESS`
     file in `out`; bare data files may be the debris of an aborted
     write) AND the recorded `_SEED` fingerprint matches the derivation
@@ -365,9 +367,11 @@ def seeded_landing(
 
     `committed`: zero-arg completion predicate for seeds without the
     `_SUCCESS` convention (the Derby JDBC seed checks its database
-    directory). Keeping those callers on THIS function keeps the
-    marker discipline in one copy — the r13 atomicity fix landed in
-    one hand-rolled clone and missed another."""
+    directory). `write()` must leave `out` holding only its own output
+    (clear it first, as a mode-overwrite job does), and must make the
+    completion check true only once everything is written. Keeping
+    every artifact on THIS function keeps the marker discipline in one
+    copy: a fix to a hand-rolled clone can miss the others."""
     marker = os.path.join(out, "_SEED")
 
     def _ok() -> bool:

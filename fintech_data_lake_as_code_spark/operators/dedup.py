@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from ..io import cpu_spread, load, release_local_checkpoint, width_preserving_spread
 from ..registry import query
+from .similarity import _dot, _dvec
 
 # --- corpus construction (shared): plant a near-dup twin for every 10th doc
 
@@ -560,16 +561,6 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- embedding cosine near-dup ----------------------------------------------
-
-
-def _dvec(col: str) -> Column:
-    return F.transform(col, lambda x: x.cast("double"))
-
-
-def _dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
 
 
 def _emb_corpus(

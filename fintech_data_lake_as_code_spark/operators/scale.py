@@ -29,8 +29,8 @@ from pyspark.sql import types as T
 from ..functions.exact import cents, exact_sum
 # round-trip keys use pid_scratch_dir (see operators/scans.py's import
 # note: peer-session overwrite vs lazy readback); scratch_dir remains
-# only for the SHARED pay-once bucketed layout, whose first build is
-# serialized by io.landing_lock instead
+# only for the SHARED pay-once bucketed layout, guarded by
+# io.seeded_landing instead
 from ..io import load, pid_scratch_dir, scratch_dir
 from ..registry import query
 
@@ -163,12 +163,12 @@ def _bucketed_table(
     files with bucketing DDL instead of rewriting them — but only while
     the files' recorded layout (bucket count + key) matches the DDL this
     code would declare today: registering old-layout files under new DDL
-    would silently mis-bucket the exchange-free join, so a _LAYOUT
-    fingerprint marker guards the reuse (the Derby-seed fingerprint
-    lesson from sources/jdbc.py, applied to bucket layouts)."""
+    would silently mis-bucket the exchange-free join, so the layout is
+    an `io.seeded_landing` artifact whose fingerprint is the declared
+    shape plus the source data's identity."""
     import re
 
-    from ..io import landing_lock, sf_tag, source_fingerprint, write_marker
+    from ..io import seeded_landing, sf_tag, source_fingerprint
 
     tag = re.sub(r"[^a-z0-9]", "_", sf_tag(sf_dir))
     table = f"bkt_{tag}_{name}"
@@ -181,57 +181,33 @@ def _bucketed_table(
     if not os.path.exists(src):
         # surface the engine's standard [PATH_NOT_FOUND] AnalysisException
         # (what every scan key raises on a bad sf_dir) instead of letting
-        # source_fingerprint's os.stat throw a raw FileNotFoundError —
-        # the r14-review error-path alignment. If the file lands between
-        # the exists() check and the load (concurrent generator, the
-        # ADVICE-r17 TOCTOU note), load() succeeds — fall through to the
+        # source_fingerprint's os.stat throw a raw FileNotFoundError. If
+        # the file lands between the exists() check and the load
+        # (concurrent generator), load() succeeds — fall through to the
         # normal path rather than treating a valid source as an error.
         load(spark, sf_dir, name)
-    fingerprint = f"{N_BUCKETS}:{key}:{source_fingerprint(src)}"
-    layout_marker = os.path.join(path, "_LAYOUT")
 
-    def _layout_complete() -> bool:
-        # a complete layout requires the _SUCCESS marker (bare parquet
-        # files may be the debris of an aborted write) AND a matching
-        # _LAYOUT fingerprint (files bucketed under an older
-        # N_BUCKETS/key, or from a regenerated source, must be
-        # rewritten, not re-registered)
-        ok = False
-        if os.path.exists(layout_marker):
-            with open(layout_marker) as fh:
-                ok = fh.read().strip() == fingerprint
-        return (
-            ok
-            and os.path.exists(os.path.join(path, "_SUCCESS"))
-            and any(f.endswith(".parquet") for f in os.listdir(path))
+    def write() -> None:
+        # drop first: an overwrite through a catalog entry that points
+        # elsewhere would act on that stale location
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
+        (
+            load(spark, sf_dir, name)
+            .write.bucketBy(N_BUCKETS, key)
+            .sortBy(key)
+            .option("path", path)
+            .mode("overwrite")
+            .saveAsTable(table)
         )
 
-    have_files = _layout_complete()
+    seeded_landing(
+        path, f"{N_BUCKETS}:{key}:{source_fingerprint(src)}", write
+    )
     if spark.catalog.tableExists(table):
-        if have_files and _registered_layout_matches(spark, table, key, path):
+        if _registered_layout_matches(spark, table, key, path):
             return spark.table(table)
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-    if not have_files:
-        # serialize concurrent first-builders (io.landing_lock, the
-        # seeded_landing discipline): two sessions racing the layout
-        # write would interleave bucketed overwrite jobs in one dir
-        with landing_lock(path):
-            if not _layout_complete():
-                (
-                    load(spark, sf_dir, name)
-                    .write.bucketBy(N_BUCKETS, key)
-                    .sortBy(key)
-                    .option("path", path)
-                    .mode("overwrite")
-                    .saveAsTable(table)
-                )
-                # absent-or-complete marker (io.write_marker): a torn/
-                # empty _LAYOUT reads as a mismatch and re-shuffles the
-                # whole layout every later session
-                write_marker(layout_marker, fingerprint)
-                return spark.table(table)
-        # a peer completed the layout while this session waited on the
-        # lock — fall through and register its files under our catalog
+        spark.sql(f"DROP TABLE {table}")
+    # files a peer or an earlier session landed: register them
     schema_ddl = ", ".join(
         f"{f.name} {f.dataType.simpleString()}"
         for f in load(spark, sf_dir, name).schema.fields
@@ -249,7 +225,7 @@ def _registered_layout_matches(
 ) -> bool:
     """True iff the already-registered catalog table declares exactly the
     bucketing this code would declare today (N_BUCKETS buckets on `key`)
-    AND points at `path` — the scratch location whose _LAYOUT marker the
+    AND points at `path` — the scratch location whose `_SEED` marker the
     caller just validated. Within one session the constants cannot
     change, but the catalog may outlive this module's idea of the layout
     (persistent metastore, REPL re-import after an edit) — so trust

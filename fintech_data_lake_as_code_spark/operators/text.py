@@ -952,104 +952,54 @@ def _bmp_dir(spark: SparkSession, sf_dir: str) -> str:
     precondition for the binaryFile scan. Filenames carry the doc_id so
     the scan's output is differentiable against the documents table.
 
-    Publication is ATOMIC: files are written into a pid-unique temp
-    sibling and `os.rename`d into place, so a concurrent session's
-    binaryFile listing can never observe a half-seeded directory (two
-    sessions — background bench plus pytest — both passing a plain
-    marker check was a real race). POSIX rename onto the empty
-    `scratch_dir`-created target succeeds; losing a publish race fails
-    ENOTEMPTY, and the winner's marker makes that loss benign.
-
-    The `_SEEDED` marker records BOTH deriving modules' fingerprints
-    (this module — `_encode_bmp` and the sampling predicate — plus
-    io.py, whose load() normalization the payload flows through),
-    checked by CONTENT: a bare existence check would serve stale BMPs
-    against a freshly recomputed oracle after a derivation change (the
-    io.seeded_landing lesson, kept rename-atomic because binaryFile
-    listing races are real here); either module unreadable -> None ->
-    always reseed."""
+    The directory is an `io.seeded_landing` artifact: `_SUCCESS` is
+    touched only after every file is written, and the landing lock
+    serializes first writers, so a concurrent session's binaryFile
+    listing never sees a half-seeded directory. The fingerprint covers
+    this module (`_encode_bmp` and the sampling predicate) and io.py,
+    whose load() normalization the payload flows through."""
     import os
     import shutil
     import sys
 
     from .. import io as _io_module
-    from ..io import module_fingerprint, scratch_dir
+    from ..io import module_fingerprint, scratch_dir, seeded_landing
 
     out = scratch_dir(sf_dir, "bmp_files")
-    marker = os.path.join(out, "_SEEDED")
-    fp_io = module_fingerprint(_io_module)
-    fp_self = module_fingerprint(sys.modules[__name__])
-    fp = (
-        None
-        if fp_io is None or fp_self is None
-        else f"{fp_io}:{fp_self}"
-    )
-    seeded = False
-    if fp is not None and os.path.exists(marker):
-        with open(marker) as fh:
-            seeded = fh.read().strip() == fp
-    if not seeded:
-        tmp = f"{out}.tmp.{os.getpid()}"
-        os.makedirs(tmp, exist_ok=True)
-        d = (
+
+    def write_files(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        import os as _os
+
+        for pdf in batches:
+            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
+                if payload is None:
+                    # a NULL payload cannot become a file; skip it
+                    # (fixtures carry no NULL text — defensive only)
+                    continue
+                p = bytes(payload)
+                width, height, _ = _bmp_dims(len(p))
+                bmp = _encode_bmp(p, width, height)
+                path = _os.path.join(out, f"doc_{int(doc_id)}.bmp")
+                with open(path, "wb") as fh:
+                    fh.write(bmp)
+            yield pd.DataFrame({"n": [len(pdf)]})
+
+    def write() -> None:
+        shutil.rmtree(out, ignore_errors=True)
+        os.makedirs(out)
+        (
             load(spark, sf_dir, "documents")
             .where(F.col("doc_id") % 6 == 0)
             .select("doc_id", F.encode("text", "UTF-8").alias("payload"))
+            .mapInPandas(write_files, "n int")
+            .agg(F.sum("n"))
+            .collect()
         )
+        open(os.path.join(out, "_SUCCESS"), "w").close()
 
-        def write_files(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            import os as _os
-
-            for pdf in batches:
-                for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                    if payload is None:
-                        # a NULL payload cannot become a file; skip it
-                        # (fixtures carry no NULL text — defensive only)
-                        continue
-                    p = bytes(payload)
-                    width, height, _ = _bmp_dims(len(p))
-                    bmp = _encode_bmp(p, width, height)
-                    path = _os.path.join(tmp, f"doc_{int(doc_id)}.bmp")
-                    with open(path, "wb") as fh:
-                        fh.write(bmp)
-                yield pd.DataFrame({"n": [len(pdf)]})
-
-        d.mapInPandas(write_files, "n int").agg(F.sum("n")).collect()
-        with open(os.path.join(tmp, "_SEEDED"), "w") as fh:
-            # an unreadable module source records a token no future
-            # content check matches -> always reseed (the
-            # seeded_landing "unverifiable" convention)
-            fh.write((fp or "unverifiable") + "\n")
-        try:
-            os.rename(tmp, out)
-        except OSError:
-            fresh = False
-            if fp is not None and os.path.exists(marker):
-                with open(marker) as fh:
-                    fresh = fh.read().strip() == fp
-            if fresh:
-                # a concurrent seeder with the SAME derivation
-                # published first; writes are deterministic, so defer
-                # to the winner
-                shutil.rmtree(tmp, ignore_errors=True)
-            else:
-                # stale partial (crashed pre-atomic seeding) or a seed
-                # from an older derivation: replace it. The replacement
-                # rename can ALSO lose to a concurrent stale-path racer
-                # (both rmtree'd, the other renamed first -> ENOTEMPTY),
-                # so give it the same re-check-and-defer handling.
-                shutil.rmtree(out, ignore_errors=True)
-                try:
-                    os.rename(tmp, out)
-                except OSError:
-                    fresh2 = False
-                    if fp is not None and os.path.exists(marker):
-                        with open(marker) as fh:
-                            fresh2 = fh.read().strip() == fp
-                    if not fresh2:
-                        raise
-                    shutil.rmtree(tmp, ignore_errors=True)
-    return out
+    return seeded_landing(
+        out, module_fingerprint(_io_module, sys.modules[__name__]), write
+    )
 
 
 @query(

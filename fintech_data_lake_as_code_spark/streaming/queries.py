@@ -342,12 +342,10 @@ def stream_dedupe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # _SUCCESS+fingerprint-guarded reuse (io.seeded_landing): the dupe
     # injection is defined HERE, and io.load's normalization shapes the
-    # landed JSON too — fingerprint BOTH modules (colon-joined, the
-    # _bmp_dir convention); either unreadable -> None -> always reseed
-    fp_self = module_fingerprint(sys.modules[__name__])
-    fp_io = module_fingerprint(_io_module)
-    fp = None if fp_self is None or fp_io is None else f"{fp_io}:{fp_self}"
-    seeded_landing(out, fp, _seed)
+    # landed JSON too — fingerprint BOTH modules
+    seeded_landing(
+        out, module_fingerprint(_io_module, sys.modules[__name__]), _seed
+    )
 
     # re-pin UTC for the marker-skip path (the _events_json_dir lesson):
     # when the seed is reused, no load() runs before the stream parses
@@ -1592,13 +1590,10 @@ def _docs_json_dir(spark: SparkSession, sf_dir: str) -> str:
     # landed content = fixture (static) + io.load's normalization +
     # _corpus's perturbation — fingerprint BOTH deriving modules (an
     # io.py load change must reseed here just as it does for
-    # _events_json_dir); either unreadable -> None -> always reseed
-    fp_io = module_fingerprint(_io_module)
-    fp_dedup = module_fingerprint(_dedup_module)
-    fp = None if fp_io is None or fp_dedup is None else f"{fp_io}:{fp_dedup}"
+    # _events_json_dir)
     return seeded_landing(
         out,
-        fp,
+        module_fingerprint(_io_module, _dedup_module),
         lambda: _corpus(spark, sf_dir)
         .repartition(4, "doc_id")
         .write.mode("overwrite")
@@ -1692,8 +1687,8 @@ class IncrementalDedupIndex:
         if self._table_ensured:
             return
         loc = os.path.join(self.root, "postings")
-        # Layout fingerprint guard (the _bucketed_table discipline,
-        # operators/scale.py:_LAYOUT): postings FILES persist under the
+        # Layout fingerprint guard (the seeded-layout discipline of
+        # operators/scale._bucketed_table): postings FILES persist under the
         # root while the catalog entry may not (fresh metastore, DROP),
         # and CREATE IF NOT EXISTS would happily re-register old-layout
         # files under today's DDL — a bucketed scan then assumes a hash

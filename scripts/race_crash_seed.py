@@ -12,7 +12,7 @@ Per seed family:
   1. clear the family's shared scratch (all rebuildable by design),
   2. spawn a driver-style victim (`rehearse_prefix.py --keys <key>`)
      in its own process group,
-  3. poll for seed activity (lock file / tmp dir / data landing) while
+  3. poll for seed activity (lock file / seed dir / data landing) while
      the completion marker is still absent, then SIGKILL the whole
      group (python AND the JVM — an orphaned JVM would finish the seed
      and hide the crash),
@@ -28,7 +28,6 @@ mid-seed kill and the fresh peer recovered.
 from __future__ import annotations
 
 import argparse
-import glob
 import os
 import shutil
 import signal
@@ -99,8 +98,8 @@ def _family_specs(sf: str, victim_pid: int) -> dict[str, dict]:
             # window stays open until BOTH tables' layouts commit — a
             # kill between the two is the interesting half-done state
             markers=[
-                os.path.join(b, "bucketed_lineitem", "_LAYOUT"),
-                os.path.join(b, "bucketed_orders", "_LAYOUT"),
+                os.path.join(b, "bucketed_lineitem", "_SEED"),
+                os.path.join(b, "bucketed_orders", "_SEED"),
             ],
         ),
         "derby": dict(
@@ -122,11 +121,15 @@ def _family_specs(sf: str, victim_pid: int) -> dict[str, dict]:
         ),
         "bmp_files": dict(
             key="scan_binaryfile",
-            clear=[os.path.join(b, "bmp_files")]
-            + glob.glob(os.path.join(b, "bmp_files.tmp.*")),
-            activity=[],  # glob below — tmp dir name embeds the pid
-            activity_glob=os.path.join(b, "bmp_files.tmp.*"),
-            markers=[os.path.join(b, "bmp_files", "_SEEDED")],
+            clear=[
+                os.path.join(b, "bmp_files"),
+                os.path.join(b, "bmp_files.lock"),
+            ],
+            activity=[
+                os.path.join(b, "bmp_files.lock"),
+                os.path.join(b, "bmp_files"),
+            ],
+            markers=[os.path.join(b, "bmp_files", "_SEED")],
         ),
     }
 
@@ -159,10 +162,7 @@ def _clear(paths: list[str]) -> None:
 
 
 def _any_activity(spec: dict) -> bool:
-    if any(os.path.exists(p) for p in spec["activity"]):
-        return True
-    g = spec.get("activity_glob")
-    return bool(g and glob.glob(g))
+    return any(os.path.exists(p) for p in spec["activity"])
 
 
 def _all_markers(spec: dict) -> bool:
@@ -172,15 +172,7 @@ def _all_markers(spec: dict) -> bool:
 def _has_debris(spec: dict) -> bool:
     """At least one real FILE landed under a seed dir (task output or
     `_temporary` commit files) — the mid-write crash state."""
-    roots = [c for c in spec["clear"] if os.path.isdir(c)]
-    g = spec.get("activity_glob")
-    if g:
-        roots += [p for p in glob.glob(g) if os.path.isdir(p)]
-    for root in roots:
-        for _, _, files in os.walk(root):
-            if files:
-                return True
-    return False
+    return any(files for c in spec["clear"] for _, _, files in os.walk(c))
 
 
 def _run_family(

@@ -95,11 +95,9 @@ def test_bench_summary_line_stays_tail_safe():
         shuffle_ratio=12.345,
         shuffle_post_ratio=12.345,
         extras_v6_total=1234.567,
-        # worst case: EVERY headline key leaked every rep, and the
-        # shuffle probe retried to exhaustion — the summary must still
-        # fit the tail budget
+        # worst case: EVERY headline key leaked every rep — the summary
+        # must still fit the tail budget
         cache_leaks={k: 99 for k in bench.HEADLINE},
-        shuffle_probe_retries=3,
     )
     line = json.dumps(summary)
     assert len(line) < bench.SUMMARY_LINE_BUDGET, len(line)
@@ -120,10 +118,9 @@ def test_bench_summary_line_stays_tail_safe():
         "calibration_shuffle_ratio",
         "calibration_shuffle_post_ratio",
         "cache_leaks",
-        "shuffle_probe_retries",
     ):
         assert field in parsed, field
-    # a healthy run emits cache_leaks={} and omits the retry count
+    # a healthy run emits cache_leaks={}
     healthy = bench.build_summary(
         sf=0.1,
         timings=fat,
@@ -135,10 +132,8 @@ def test_bench_summary_line_stays_tail_safe():
         extras_v5_total=1.0,
         fresh={},
         cache_leaks={},
-        shuffle_probe_retries=0,
     )
     assert healthy["cache_leaks"] == {}
-    assert "shuffle_probe_retries" not in healthy
 
 
 def test_bench_key_lists_exist_in_registry():

@@ -290,19 +290,16 @@ def test_bmp_codec_roundtrip_and_rejects_garbage():
 
 
 def test_bmp_dir_reseeds_on_stale_fingerprint(spark, sf_dir):
-    # _bmp_dir's _SEEDED marker is checked by CONTENT (io+text module
+    # _bmp_dir's _SEED marker is checked by CONTENT (io+text module
     # fingerprints): a seed left by an older derivation must be
-    # REPLACED through the rename-failure branch (rename onto the
-    # non-empty stale dir raises, the stale marker does not match
-    # today's fingerprint, so the loser sweeps and republishes),
-    # never trusted (r11 latent finding).
+    # REPLACED, never trusted.
     import glob
     import os
 
     from fintech_data_lake_as_code_spark.operators.text import _bmp_dir
 
     out = _bmp_dir(spark, sf_dir)
-    marker = os.path.join(out, "_SEEDED")
+    marker = os.path.join(out, "_SEED")
     with open(marker) as fh:
         fresh_fp = fh.read().strip()
     assert ":" in fresh_fp  # io-fingerprint : text-fingerprint
@@ -324,6 +321,29 @@ def test_bmp_dir_reseeds_on_stale_fingerprint(spark, sf_dir):
         assert fh.read().strip() == fresh_fp
     assert not os.path.exists(sentinel)
     assert len(glob.glob(os.path.join(out, "*.bmp"))) == n_files
+
+
+def test_bmp_dir_reseeds_after_interrupted_write(spark, sf_dir):
+    # a matching _SEED without _SUCCESS is the debris of an interrupted
+    # reseed (the directory is cleared and refilled in place): it must
+    # be rewritten, never listed as a complete image lake
+    import glob
+    import os
+
+    from fintech_data_lake_as_code_spark.operators.text import _bmp_dir
+
+    out = _bmp_dir(spark, sf_dir)
+    n_files = len(glob.glob(os.path.join(out, "*.bmp")))
+    assert n_files > 0
+    assert os.path.exists(os.path.join(out, "_SEED"))
+    os.remove(os.path.join(out, "_SUCCESS"))
+    sentinel = os.path.join(out, "_TEST_SENTINEL")
+    with open(sentinel, "w") as fh:
+        fh.write("x")
+    assert _bmp_dir(spark, sf_dir) == out
+    assert not os.path.exists(sentinel)
+    assert len(glob.glob(os.path.join(out, "*.bmp"))) == n_files
+    assert os.path.exists(os.path.join(out, "_SUCCESS"))
 
 
 def test_decontaminate_excludes_benchmark_and_bounds_share(spark, sf_dir):

@@ -751,7 +751,7 @@ def test_bucketed_layout_fingerprint_guards_reuse(spark, sf_dir):
 
     _bucketed_table(spark, sf_dir, "orders", "o_orderkey")
     path = scratch_dir(sf_dir, "bucketed_orders")
-    marker = os.path.join(path, "_LAYOUT")
+    marker = os.path.join(path, "_SEED")
     # the fingerprint binds shape AND source identity (r13 latent
     # finding: a regenerated sf_dir must invalidate the layout)
     src_fp = source_fingerprint(os.path.join(sf_dir, "orders.parquet"))
@@ -801,9 +801,9 @@ def test_bucketed_missing_source_raises_the_standard_scan_error(spark):
 
 
 def test_bucketed_build_defers_to_peer_completed_layout(spark, sf_dir):
-    # The landing_lock on-wake fall-through (r18 race-class close): a
-    # session that entered the build path because the layout looked
-    # incomplete must RE-CHECK after acquiring the lock, and when a
+    # The landing_lock on-wake re-check: a session that entered the
+    # build path because the layout looked incomplete must RE-CHECK
+    # after acquiring the lock, and when a
     # peer finished the identical layout while it waited, REGISTER the
     # peer's files (DDL over LOCATION) instead of rewriting them.
     # Simulated single-process: a wrapped landing_lock plays the peer
@@ -1040,7 +1040,7 @@ def test_bucketed_registration_mismatch_rebuilds(spark, sf_dir):
 
     # right bucketing, wrong Location: a stale metastore entry pointing
     # at ANOTHER scratch root must not be trusted on the strength of a
-    # _LAYOUT marker it never read
+    # _SEED marker it never read
     other = scratch_dir(sf_dir, "bucketed_orders_elsewhere")
     spark.sql(f"DROP TABLE {table}")
     spark.sql(

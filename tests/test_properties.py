@@ -486,11 +486,19 @@ def test_module_fingerprint_unreadable_source_returns_none():
     from fintech_data_lake_as_code_spark.io import module_fingerprint
     from fintech_data_lake_as_code_spark import io as io_module
 
-    assert module_fingerprint(io_module) is not None
+    from fintech_data_lake_as_code_spark import registry as registry_module
+
+    a = module_fingerprint(io_module)
+    assert a is not None
     ghost = types.ModuleType("ghost")  # no __file__ at all
     assert module_fingerprint(ghost) is None
     ghost.__file__ = "/nonexistent/path/ghost.py"
     assert module_fingerprint(ghost) is None
+    # several modules: per-module digests joined in argument order, and
+    # one unreadable module makes the whole fingerprint unverifiable
+    b = module_fingerprint(registry_module)
+    assert module_fingerprint(io_module, registry_module) == f"{a}:{b}"
+    assert module_fingerprint(io_module, ghost) is None
 
 
 @given(

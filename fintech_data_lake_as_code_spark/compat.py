@@ -92,12 +92,6 @@ def ensure_protobuf() -> bool:
     return False
 
 
-# Keyed by applicationId (same convention as dedup's _SHINGLED_CACHE):
-# id(sparkContext) could be reused by CPython after the old context is
-# garbage-collected, silently handing a new session a stale verdict.
-_worker_probe_cache: dict[str, bool] = {}
-
-
 def tws_supported(spark) -> bool:
     """Whether `transformWithStateInPandas` can actually run on THIS
     session: RocksDB state store configured, driver-side protobuf
@@ -115,30 +109,26 @@ def tws_supported(spark) -> bool:
         return False
     if not ensure_protobuf():
         return False
-    key = spark.sparkContext.applicationId
-    if key not in _worker_probe_cache:
+    from .io import session_memo
 
-        def probe(batches):
-            import pandas as pd
+    def probe(batches):
+        import pandas as pd
 
-            try:
-                from pyspark.sql.streaming.proto import (  # noqa: F401
-                    StateMessage_pb2,
-                )
+        try:
+            from pyspark.sql.streaming.proto import (  # noqa: F401
+                StateMessage_pb2,
+            )
 
-                ok = 1
-            except Exception:
-                ok = 0
-            yield pd.DataFrame({"ok": [ok]})
+            ok = 1
+        except Exception:
+            ok = 0
+        yield pd.DataFrame({"ok": [ok]})
 
-        row = (
-            spark.range(1).coalesce(1).mapInPandas(probe, "ok int").first()
-        )
-        _worker_probe_cache[key] = bool(row and row.ok == 1)
-    return _worker_probe_cache[key]
+    def run() -> bool:
+        row = spark.range(1).coalesce(1).mapInPandas(probe, "ok int").first()
+        return bool(row and row.ok == 1)
 
-
-_avro_probe_cache: dict[str, bool] = {}
+    return session_memo(spark, "compat.tws_worker_probe", (), run)
 
 
 def avro_supported(spark) -> bool:
@@ -152,19 +142,20 @@ def avro_supported(spark) -> bool:
     absent; clusters launched with --packages / vendored jars get the
     real round-trip. Probed by an actual 1-row write+read — the only
     check that covers both the DataSource lookup and the reader path —
-    and cached per applicationId."""
+    and memoized once per application (`io.session_memo`)."""
     import shutil
     import tempfile
 
-    key = spark.sparkContext.applicationId
-    if key not in _avro_probe_cache:
+    from .io import session_memo
+
+    def run() -> bool:
         tmp = tempfile.mkdtemp(prefix="avro_probe_")
         try:
             spark.range(1).write.mode("overwrite").format("avro").save(tmp)
-            ok = spark.read.format("avro").load(tmp).count() == 1
+            return spark.read.format("avro").load(tmp).count() == 1
         except Exception:
-            ok = False
+            return False
         finally:
             shutil.rmtree(tmp, ignore_errors=True)
-        _avro_probe_cache[key] = ok
-    return _avro_probe_cache[key]
+
+    return session_memo(spark, "compat.avro_probe", (), run)

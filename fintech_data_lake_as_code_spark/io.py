@@ -294,22 +294,48 @@ def source_fingerprint(*paths: str) -> str:
     return h.hexdigest()[:16]
 
 
-def module_fingerprint(*modules) -> str | None:
+def module_fingerprint(*modules, sources=()) -> str | None:
     """sha256 of each module's source file, joined with ':' in argument
-    order, or None when any of them can't be read (bytecode-only
-    install, zipimport). Seed/landing markers record this so a
-    derivation-code change invalidates the seeded artifact instead of
-    serving stale rows; None means "unverifiable — always reseed"."""
+    order, then the `source_fingerprint` of `sources` if any; None when
+    any can't be read (bytecode-only install, zipimport, missing source).
+    Seed/landing markers record this so a derivation-code change or a
+    source rewritten in place reseeds instead of serving stale rows;
+    None means "unverifiable — always reseed"."""
     import hashlib
 
     digests = []
-    for module in modules:
-        try:
+    try:
+        for module in modules:
             with open(module.__file__, "rb") as fh:
                 digests.append(hashlib.sha256(fh.read()).hexdigest())
-        except (OSError, TypeError, AttributeError):
-            return None
+        if sources:
+            digests.append(source_fingerprint(*sources))
+    except (OSError, TypeError, AttributeError):
+        return None
     return ":".join(digests)
+
+
+# (applicationId, name, sources) -> (source fingerprint, value)
+_SESSION_MEMO: dict[tuple, tuple[str, object]] = {}
+
+
+def session_memo(spark: SparkSession, name: str, sources, build):
+    """The one in-session reuse mechanism: `build()`'s value, kept per
+    (applicationId, name, sources) while the `source_fingerprint` of
+    `sources` is unchanged. applicationId, not id(sparkContext): CPython
+    reuses ids, which could hand a new session a stale value. When the
+    sources change (rows appended, regenerated in place) a superseded
+    cached DataFrame is unpersisted BEFORE the rebuild, so the session
+    never holds two copies. `sources=()` means once per application."""
+    key = (spark.sparkContext.applicationId, name, tuple(sources))
+    fp = source_fingerprint(*sources)
+    old_fp, old = _SESSION_MEMO.get(key, (None, None))
+    if old_fp == fp:
+        return old
+    if isinstance(old, DataFrame) and old.is_cached:
+        old.unpersist()
+    _SESSION_MEMO[key] = (fp, build())
+    return _SESSION_MEMO[key][1]
 
 
 def landing_lock(out: str):

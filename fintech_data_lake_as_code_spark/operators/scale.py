@@ -168,7 +168,7 @@ def _bucketed_table(
     shape plus the source data's identity."""
     import re
 
-    from ..io import seeded_landing, sf_tag, source_fingerprint
+    from ..io import seeded_landing, session_memo, sf_tag, source_fingerprint
 
     tag = re.sub(r"[^a-z0-9]", "_", sf_tag(sf_dir))
     table = f"bkt_{tag}_{name}"
@@ -200,23 +200,34 @@ def _bucketed_table(
             .saveAsTable(table)
         )
 
+    def register() -> None:
+        # files a peer or an earlier session landed: register them
+        schema_ddl = ", ".join(
+            f"{f.name} {f.dataType.simpleString()}"
+            for f in load(spark, sf_dir, name).schema.fields
+        )
+        spark.sql(
+            f"CREATE TABLE {table} ({schema_ddl}) USING PARQUET"
+            f" CLUSTERED BY ({key}) SORTED BY ({key}) INTO {N_BUCKETS} BUCKETS"
+            f" LOCATION '{path}'"
+        )
+
+    def check_registered() -> None:
+        if not _registered_layout_matches(spark, table, key, path):
+            spark.sql(f"DROP TABLE {table}")
+            register()
+
     seeded_landing(
         path, f"{N_BUCKETS}:{key}:{source_fingerprint(src)}", write
     )
-    if spark.catalog.tableExists(table):
-        if _registered_layout_matches(spark, table, key, path):
-            return spark.table(table)
-        spark.sql(f"DROP TABLE {table}")
-    # files a peer or an earlier session landed: register them
-    schema_ddl = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in load(spark, sf_dir, name).schema.fields
-    )
-    spark.sql(
-        f"CREATE TABLE {table} ({schema_ddl}) USING PARQUET"
-        f" CLUSTERED BY ({key}) SORTED BY ({key}) INTO {N_BUCKETS} BUCKETS"
-        f" LOCATION '{path}'"
-    )
+    if not spark.catalog.tableExists(table):
+        register()
+    else:
+        # the DESCRIBE runs once per session and layout identity (the
+        # name carries the constants, the source its data): DDL issued
+        # by hand against the table after the check is not re-checked
+        memo = f"scale.bucketed:{N_BUCKETS}:{key}:{path}"
+        session_memo(spark, memo, (src,), check_registered)
     return spark.table(table)
 
 

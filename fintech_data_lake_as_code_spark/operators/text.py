@@ -956,8 +956,9 @@ def _bmp_dir(spark: SparkSession, sf_dir: str) -> str:
     touched only after every file is written, and the landing lock
     serializes first writers, so a concurrent session's binaryFile
     listing never sees a half-seeded directory. The fingerprint covers
-    this module (`_encode_bmp` and the sampling predicate) and io.py,
-    whose load() normalization the payload flows through."""
+    this module (`_encode_bmp` and the sampling predicate), io.py,
+    whose load() normalization the payload flows through, and the
+    documents file."""
     import os
     import shutil
     import sys
@@ -997,9 +998,9 @@ def _bmp_dir(spark: SparkSession, sf_dir: str) -> str:
         )
         open(os.path.join(out, "_SUCCESS"), "w").close()
 
-    return seeded_landing(
-        out, module_fingerprint(_io_module, sys.modules[__name__]), write
-    )
+    src = f"{sf_dir}/documents.parquet"
+    fp = module_fingerprint(_io_module, sys.modules[__name__], sources=(src,))
+    return seeded_landing(out, fp, write)
 
 
 @query(

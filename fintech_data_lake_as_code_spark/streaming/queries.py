@@ -60,11 +60,11 @@ def _events_json_dir(spark: SparkSession, sf_dir: str) -> str:
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     out = scratch_dir(sf_dir, "stream_src_events")
-    # the landed content is fully determined by the fixture (static) and
-    # the loader's normalization (io.load) — fingerprint the loader
+    # the landed content is fully determined by the source file and the
+    # loader's normalization (io.load) — fingerprint both
     return seeded_landing(
         out,
-        module_fingerprint(_io_module),
+        module_fingerprint(_io_module, sources=(f"{sf_dir}/events.parquet",)),
         lambda: load(spark, sf_dir, "events")
         .coalesce(4)
         .write.mode("overwrite")
@@ -342,10 +342,10 @@ def stream_dedupe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # _SUCCESS+fingerprint-guarded reuse (io.seeded_landing): the dupe
     # injection is defined HERE, and io.load's normalization shapes the
-    # landed JSON too — fingerprint BOTH modules
-    seeded_landing(
-        out, module_fingerprint(_io_module, sys.modules[__name__]), _seed
-    )
+    # landed JSON too — fingerprint BOTH modules and the source file
+    src = f"{sf_dir}/events.parquet"
+    fp = module_fingerprint(_io_module, sys.modules[__name__], sources=(src,))
+    seeded_landing(out, fp, _seed)
 
     # re-pin UTC for the marker-skip path (the _events_json_dir lesson):
     # when the seed is reused, no load() runs before the stream parses
@@ -1587,13 +1587,14 @@ def _docs_json_dir(spark: SparkSession, sf_dir: str) -> str:
     from ..operators.dedup import _corpus
 
     out = scratch_dir(sf_dir, "stream_src_docs")
-    # landed content = fixture (static) + io.load's normalization +
+    # landed content = source file + io.load's normalization +
     # _corpus's perturbation — fingerprint BOTH deriving modules (an
     # io.py load change must reseed here just as it does for
-    # _events_json_dir)
+    # _events_json_dir) and the source
+    src = f"{sf_dir}/documents.parquet"
     return seeded_landing(
         out,
-        module_fingerprint(_io_module, _dedup_module),
+        module_fingerprint(_io_module, _dedup_module, sources=(src,)),
         lambda: _corpus(spark, sf_dir)
         .repartition(4, "doc_id")
         .write.mode("overwrite")

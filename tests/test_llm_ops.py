@@ -1017,26 +1017,41 @@ def test_maxsim_ann_prunes_and_still_finds_true_top1(spark):
 
 def test_session_memo_registry_covers_every_memo_dict(spark, sf_dir):
     """bench's leak guard snapshots the sanctioned persistent-RDD set
-    ONCE, in the prelude — so every module-level memo cache must be in
-    _SESSION_MEMOS (and thus warmed by the prelude), or it populates
-    lazily inside a timed rep and the guard unpersists it as a "leak"
-    after rep 1, silently defeating the memo (ADVICE r14). This pins
-    registry completeness BY ENUMERATION: a new *_CACHE dict fails here
-    until it registers a warmer."""
+    ONCE, in the prelude — so warm_session_memos must build and fully
+    materialize every session memo a dedup key reads, or that memo
+    populates lazily inside a timed rep and the guard unpersists it as
+    a "leak" after rep 1, silently defeating it (the one-shot snapshot
+    cannot tell a fresh memo from a leak). Pinned by behaviour: after
+    the warm, building every key registered from operators/dedup.py
+    adds no io memo entry for this sf_dir, and every memo's RDD has all
+    of its partitions cached."""
+    from fintech_data_lake_as_code_spark import io as fio
     import fintech_data_lake_as_code_spark.operators.dedup as D
 
-    memo_dicts = sorted(
-        n for n, v in vars(D).items()
-        if isinstance(v, dict) and n.endswith("_CACHE")
-    )
-    assert len(D._SESSION_MEMOS) == len(memo_dicts), (
-        f"memo dicts {memo_dicts} vs {len(D._SESSION_MEMOS)} warmers — "
-        "register the new memo in _SESSION_MEMOS"
-    )
+    app = spark.sparkContext.applicationId
+    src = f"{sf_dir}/documents.parquet"
+
+    def memos() -> set:
+        return {k for k in fio._SESSION_MEMO if k[0] == app and src in k[2]}
+
     D.warm_session_memos(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    for name in memo_dicts:
-        assert key in getattr(D, name), f"{name} not populated by warm"
+    warmed = memos()
+    assert len(warmed) == len(D._SESSION_MEMOS), warmed
+    for spec in SPECS.values():
+        if spec.fn.__module__ == D.__name__:
+            spec.fn(spark, sf_dir)  # build only: the plan is enough
+    assert memos() == warmed, memos() - warmed
+
+    storage = {
+        i.id(): i for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()
+    }
+    for k in warmed:
+        df = fio._SESSION_MEMO[k][1]
+        rdd = df._jdf.queryExecution().withCachedData()
+        rdd_id = rdd.cacheBuilder().cachedColumnBuffers().id()
+        info = storage.get(rdd_id)
+        assert info is not None, f"{k[1]} holds no cached blocks"
+        assert info.numCachedPartitions() == info.numPartitions(), k[1]
 
 
 def test_bpe_driver_side_merges_match_spark_loop(spark):

@@ -480,6 +480,23 @@ def test_seeded_landing_trusts_only_committed_matching_seeds(tmp_path):
     assert not os.path.exists(os.path.join(out, "_SEED"))
 
 
+def test_only_io_reads_the_application_id():
+    # in-session reuse has one mechanism, io.session_memo, keyed by the
+    # Spark applicationId: any other engine module reading the id is
+    # hand-rolling its own per-application memo beside it
+    import pathlib
+
+    import fintech_data_lake_as_code_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    readers = sorted(
+        str(p.relative_to(root))
+        for p in root.rglob("*.py")
+        if "applicationId" in p.read_text()
+    )
+    assert readers == ["io.py"], readers
+
+
 def test_module_fingerprint_unreadable_source_returns_none():
     import types
 

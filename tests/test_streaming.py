@@ -794,7 +794,8 @@ def test_docs_landing_fingerprints_both_deriving_modules(spark, sf_dir):
     # normalization AND dedup's perturbation — the _SEED marker must
     # bind BOTH module fingerprints so a change to either reseeds
     # (a single-module fingerprint silently served a stale corpus
-    # against a freshly recomputed oracle).
+    # against a freshly recomputed oracle) — plus the source file's
+    # identity, so documents.parquet rewritten in place reseeds too.
     import os
 
     from fintech_data_lake_as_code_spark.streaming.queries import (
@@ -805,10 +806,10 @@ def test_docs_landing_fingerprints_both_deriving_modules(spark, sf_dir):
     with open(os.path.join(src, "_SEED")) as fh:
         fp = fh.read().strip()
     parts = fp.split(":")
-    assert len(parts) == 2, fp
-    assert all(
-        len(p) == 64 and set(p) <= set("0123456789abcdef") for p in parts
-    ), fp
+    assert len(parts) == 3, fp
+    hexdigits = set("0123456789abcdef")
+    assert all(len(p) == 64 and set(p) <= hexdigits for p in parts[:2]), fp
+    assert len(parts[2]) == 16 and set(parts[2]) <= hexdigits, fp
 
 
 def test_stream_dedup_incremental_replay_and_order_independence(

@@ -259,6 +259,7 @@ def time_key(spark, sf_dir: str, key: str, fn, guard, reader):
     """N_RUNS timed noop-sink runs of one key -> (run seconds, profile).
     `reader` is a perfbench.tracing.StatusReader positioned at this key's
     first job; it is read once, after the reps."""
+    jit_ms0 = _jit_ms(spark)
     runs, builds, windows = [], [], []
     for _ in range(N_RUNS):
         t0 = time.perf_counter()
@@ -270,17 +271,26 @@ def time_key(spark, sf_dir: str, key: str, fn, guard, reader):
         builds.append(t1 - t0)
         windows.append((t0, t1, t2))
         guard(key)
-    return runs, profile(reader.new_work(), runs, builds, windows)
+    jit_s = (_jit_ms(spark) - jit_ms0) / 1000
+    return runs, profile(reader.new_work(), runs, builds, windows, jit_s)
 
 
-def profile(work: dict, runs, builds, windows) -> dict:
+def _jit_ms(spark) -> int:
+    """Milliseconds the driver JVM's JIT compilers have spent so far."""
+    mx = spark._jvm.java.lang.management.ManagementFactory.getCompilationMXBean()
+    return mx.getTotalCompilationTime()
+
+
+def profile(work: dict, runs, builds, windows, jit_s: float) -> dict:
     """Where one key's time went, from the status store's record of its
     reps (`StatusReader.new_work()`). Counters are per-rep means; `build_s`
     is the median time of `fn(spark, sf_dir)` (eager jobs such as fits and
     memo reads run there); `residue_s` is the write's wall time minus the
     union of its stage spans: planning, scheduling, AQE re-plans and
-    driver round-trips. `top_stages` are the median rep's three heaviest
-    stages by executor run time."""
+    driver round-trips. `jit_s` is the driver JVM's JIT compile time,
+    summed over its compiler threads, so it can exceed wall time.
+    `top_stages` are the median rep's three heaviest stages by executor
+    run time."""
     from perfbench.tracing import union_seconds
 
     n = len(runs)
@@ -315,6 +325,7 @@ def profile(work: dict, runs, builds, windows) -> dict:
         "shuffle_write_mb": mean(stage_sum("shuffle_write", MB)),
         "spill_mb": mean(stage_sum("spill", MB)),
         "residue_s": mean(max(0.0, residue)),
+        "jit_s": mean(jit_s),
         "top_stages": [
             {"stage": s["id"], "tasks": s["tasks"],
              "run_s": round(s["run_s"], 3), "cpu_s": round(s["cpu_s"], 3),

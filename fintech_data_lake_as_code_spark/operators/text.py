@@ -1270,17 +1270,10 @@ def repetition_stats(d: DataFrame) -> DataFrame:
     which carries exploded 3-grams (more bytes than the raw docs), so it
     stays on a wide scan too. Counts are partitioning-independent."""
     d = cpu_spread(d, "doc_id", keep_exchange=True)
-    words = F.split("text", " ")
+    from .dedup import _word_ngrams
+
     grams = d.select(
-        "doc_id",
-        F.explode(
-            F.transform(
-                F.sequence(
-                    F.lit(0), F.greatest(F.size(words) - 3, F.lit(0))
-                ),
-                lambda i: F.concat_ws(" ", F.slice(words, i + 1, 3)),
-            )
-        ).alias("g"),
+        "doc_id", F.explode(_word_ngrams(F.split("text", " "), 3)).alias("g")
     )
     counts = grams.groupBy("doc_id", "g").agg(F.count("*").alias("c"))
     dup_occ = F.sum(F.when(F.col("c") >= 2, F.col("c")).otherwise(0))

@@ -23,6 +23,7 @@ PROFILE_FIELDS = {
     "shuffle_write_mb",
     "spill_mb",
     "residue_s",
+    "jit_s",
     "top_stages",
 }
 STAGE_FIELDS = {
@@ -49,6 +50,7 @@ def test_time_key_profiles_a_cheap_key(spark, sf_dir):
     assert prof["tasks"] >= 1
     assert 0 <= prof["build_s"]
     assert 0 <= prof["residue_s"]
+    assert 0 <= prof["jit_s"]
     # the build is part of the rep it was split from
     assert prof["build_s"] <= sorted(runs)[-1]
     assert 1 <= len(prof["top_stages"]) <= 3

@@ -817,3 +817,24 @@ def test_cents_agree_across_engines_on_every_half_cent_tie(spark):
     assert got_spark == got_duck
     # sanity: the grid actually exercises ties (odd k -> x.5 cents)
     assert any(k % 2 == 1 for k in ks)
+
+
+def test_only_local_sessions_delay_c2(spark):
+    """`get_spark` passes the tier-4 (C2) thresholds to its driver JVM;
+    `apply_engine_conf`, the path cluster sessions take, passes no JVM
+    option at all, so long-lived JVMs keep HotSpot's defaults."""
+    from pyspark.sql import SparkSession
+
+    from fintech_data_lake_as_code_spark.session import (
+        LOCAL_DRIVER_JIT_OPTIONS,
+        apply_engine_conf,
+    )
+
+    jvm_args = list(
+        spark._jvm.java.lang.management.ManagementFactory.getRuntimeMXBean()
+        .getInputArguments()
+    )
+    for flag in LOCAL_DRIVER_JIT_OPTIONS.split():
+        assert flag.startswith("-XX:Tier4") and flag in jvm_args, flag
+    conf = apply_engine_conf(SparkSession.builder)._options
+    assert not [k for k in conf if "extraJavaOptions" in k]

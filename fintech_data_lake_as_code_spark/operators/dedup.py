@@ -1396,7 +1396,7 @@ def paragraph_dedup(d: DataFrame) -> DataFrame:
         F.posexplode(
             _word_ngrams(F.split(F.col("text"), " "), PARA_WORDS, PARA_WORDS)
         ).alias("idx", "para"),
-    ).withColumn("idx", F.col("idx").cast("bigint"))
+    )
     freq = paras.groupBy("para").agg(
         F.countDistinct("doc_id").alias("ndocs")
     )

@@ -33,7 +33,7 @@ from pyspark.sql import SparkSession
 CODEGEN_CACHE_ENTRIES = 2000
 
 
-# HotSpot tier-4 (C2) compile thresholds at 10x JDK 17's defaults (5000 /
+# HotSpot tier-4 (C2) compile thresholds at 5x JDK 17's defaults (5000 /
 # 600 / 15000 / 40000), for the local driver JVM only. Most of a short
 # local process's CPU is the JIT, not queries: in one perfbench
 # lake_queries cold pass (sf0.01, 4 cores) the driver JVM used 26.3 CPU-s,
@@ -43,11 +43,13 @@ CODEGEN_CACHE_ENTRIES = 2000
 # it stops spending a cold pass on lukewarm Catalyst, scheduler and
 # Janino code. C1 only (-XX:TieredStopAtLevel=1) was rejected: it halved
 # cold-pass CPU but raised warm-pass executor CPU 2.5x on sf0.1 curation
-# keys. Long-lived cluster JVMs need C2 early, so `apply_engine_conf`
-# leaves this out.
+# keys. 10x cut more cold-pass CPU but raised executor CPU on sf0.1
+# bench keys by up to 1.9x; 5x kept every key within 1.25x (1.12x in
+# median over six paired runs). Long-lived cluster JVMs need C2 early, so
+# `apply_engine_conf` leaves this out.
 LOCAL_DRIVER_JIT_OPTIONS = (
-    "-XX:Tier4InvocationThreshold=50000 -XX:Tier4MinInvocationThreshold=6000 "
-    "-XX:Tier4CompileThreshold=150000 -XX:Tier4BackEdgeThreshold=400000"
+    "-XX:Tier4InvocationThreshold=25000 -XX:Tier4MinInvocationThreshold=3000 "
+    "-XX:Tier4CompileThreshold=75000 -XX:Tier4BackEdgeThreshold=200000"
 )
 
 
